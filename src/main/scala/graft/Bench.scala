@@ -28,7 +28,7 @@ object Bench {
     var k = topK
     var line = build(k)
     while (line.getBytes("UTF-8").length > maxBytes && k > 1) {
-      k -= 4; line = build(k)
+      k = math.max(1, k - 4); line = build(k)
     }
     line
   }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.BrokerQueries
@@ -17,7 +16,9 @@ import graft.streaming.{DynamicAssignment, IngestPipeline}
   *    validate→assign→dedup→append chain (§3.3);
   *  - read path: `last`/`from`/`range` serve the resend envelope in any
   *    format (§3.1-3.2), `metadata` the count/bytes/first/last endpoints
-  *    (`Storage.ts:452-576`);
+  *    (`Storage.ts:452-576`); each reads only its own stream-part's
+  *    buckets (`last` via [[MessageStore.requestLastBounded]], the others
+  *    via [[MessageStore.openStreamPart]]), with one merge-on-read rule;
   *  - live path: `subscribe` receives each ingested micro-batch (R1);
   *  - ops: `deleteExpired` enforces retention by bucket drop
   *    (`DeleteExpiredCmd.ts`).
@@ -29,8 +30,8 @@ final class GraftEngine(
     /** Per-stream bucket granularity (stream id → [[MessageStore.HourBucket]]
       * for hot streams; absent streams bucket at [[MessageStore.DayBucket]])
       * — the reference sizes buckets per stream-part volume the same way
-      * (`BucketManager.ts:50-51`). Reads stay exact across any mix via
-      * [[MessageStore.pruneTimeMixed]]. */
+      * (`BucketManager.ts:50-51`). Reads stay exact across any mix: see
+      * [[MessageStore.openStreamPart]]. */
     granularityFor: Map[String, String] = Map.empty) {
 
   // The engine's NTZ columns carry UTC wall-clock (epoch-ms in the
@@ -77,31 +78,11 @@ final class GraftEngine(
   def updateAssignment(next: Option[Set[String]]): (Set[String], Set[String]) =
     assignment.update(next)
 
-  /** The store as a relation. Only the genuinely-empty cases map to an
-    * empty relation — the store not yet created, or a directory tree whose
-    * data files have all been retention-dropped (schema inference finds
-    * nothing). A corrupt or unreadable store (permissions, bad footers)
-    * propagates its error: an unreadable store must not masquerade as an
-    * empty one (reads silently answering no_resend would hide the fault). */
-  def table: DataFrame = {
-    def emptyRelation = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      graft.model.StreamMessage.schema)
-    val root = new org.apache.hadoop.fs.Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) emptyRelation
-    else
-      // upsert view (merge-on-read): replayed publishes from later
-      // micro-batches are invisible to every Engine read, matching the
-      // reference's Cassandra primary-key semantics
-      try MessageStore.openMerged(spark, storePath)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-              String.valueOf(e.getMessage).contains("Unable to infer schema") =>
-          emptyRelation
-      }
-  }
+  /** The whole store as one upsert relation (merge-on-read:
+    * replayed publishes from later micro-batches are invisible, matching
+    * the reference's Cassandra primary-key semantics). Empty when no
+    * bucket exists; a corrupt or unreadable store propagates its error. */
+  def table: DataFrame = MessageStore.openMerged(spark, storePath)
 
   /** Batch publish: one prepared micro-batch through the ingest chain,
     * persisted and fanned out. Returns accepted-row count. */
@@ -109,7 +90,7 @@ final class GraftEngine(
     val prepared = IngestPipeline.prepareBatch(messages, nowMs, assignment.get()).cache()
     try {
       val n = prepared.count()
-      if (n > 0) MessageStore.appendPerStream(prepared, storePath, granularityFor,
+      if (n > 0) MessageStore.append(prepared, storePath, granularityFor,
         widthCache = Some(widthCache))
       subscriptions.dispatch(prepared, -1L)
       n
@@ -131,14 +112,14 @@ final class GraftEngine(
       format: String = "object", version: Option[Int] = None): Iterator[Resend.Frame] =
     // bounded scan: newest buckets only (Storage.ts:142-181 analog)
     Resend.envelope(Formats.format(
-      MessageStore.requestLastBounded(spark, storePath, streamId, partition,
-        math.min(math.max(n, 0), BrokerQueries.MaxResendLast)),
+      MessageStore.requestLastBounded(spark, storePath, streamId, partition, n),
       format, version))
 
   def from(streamId: String, partition: Int, ref: MsgRef,
       format: String = "object", version: Option[Int] = None,
       publisher: Option[String] = None): Iterator[Resend.Frame] =
-    Resend.from(MessageStore.pruneTimeMixed(table, Some(ref.tsMs), None),
+    Resend.from(
+      MessageStore.openStreamPart(spark, storePath, streamId, partition, Some(ref.tsMs)),
       streamId, partition, ref, format, version, publisher)
 
   def range(streamId: String, partition: Int, fromRef: MsgRef, toRef: MsgRef,
@@ -146,13 +127,14 @@ final class GraftEngine(
       publisher: Option[String] = None,
       msgChain: Option[String] = None): Iterator[Resend.Frame] =
     Resend.range(
-      MessageStore.pruneTimeMixed(table, Some(fromRef.tsMs), Some(toRef.tsMs)),
+      MessageStore.openStreamPart(spark, storePath, streamId, partition,
+        Some(fromRef.tsMs), Some(toRef.tsMs)),
       streamId, partition, fromRef, toRef, format, version, publisher, msgChain)
 
   /** Metadata endpoints (count/bytes/first/last per stream-part). */
   def metadata(streamId: String, partition: Int): Option[(Long, Long, Long, Long)] =
     BrokerQueries.metadata(
-      table.filter(col("stream_id") === streamId && col("stream_partition") === partition))
+      MessageStore.openStreamPart(spark, storePath, streamId, partition))
       .collect().headOption.map { r =>
         (r.getAs[Long]("message_count"), r.getAs[Long]("total_bytes"),
           r.getAs[java.time.LocalDateTime]("first_ts")

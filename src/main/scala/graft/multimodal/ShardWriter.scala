@@ -521,36 +521,37 @@ object ShardWriter {
     * [[graft.streaming.StreamShardEmit.readSealedFiles]]), so the row
     * drops from that read and reappears — never phantom or torn data.
     * First writes (the non-replay case) are unaffected: the destination
-    * doesn't exist yet, so they stay atomic-or-absent. */
+    * doesn't exist yet, so they stay atomic-or-absent.
+    *
+    * `fs` is the landing directory's own FileSystem. When it is
+    * checksummed (file:// — Hadoop's ChecksumFileSystem writes a `.crc`
+    * sidecar per file, DOUBLING every create/rename/delete of a blob
+    * landing; r19 measured the sidecars as half of all files in every
+    * landing dir), the temp write and the rename run on its RAW layer, so
+    * no sidecar is made. The blobs' integrity story does not ride the
+    * sidecars: every landing is manifest-described with content digests
+    * derived through the validating readers, and the gates re-walk the
+    * on-disk bytes. The delete of the old destination still goes through
+    * `fs`, which also drops `getChecksumFile(dst)`: a sidecar an earlier
+    * checksummed writer left beside `dst` would otherwise describe the old
+    * bytes, and checksummed readers would reject the new ones. HDFS/S3A
+    * pass through unchanged (their checksumming is server-side, not a
+    * client sidecar). */
   private[graft] def writeBlob(fs: org.apache.hadoop.fs.FileSystem,
       dir: String, name: String, bytes: Array[Byte]): Unit = {
+    val raw = fs match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
     val tmp = new Path(dir, s"_tmp.$name")
-    val out = fs.create(tmp, true)
+    val out = raw.create(tmp, true)
     try out.write(Option(bytes).getOrElse(Array.emptyByteArray))
     finally out.close()
     val dst = new Path(dir, name)
     fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
+    if (!raw.rename(tmp, dst))
       throw new java.io.IOException(s"rename $tmp -> $dst failed")
   }
-
-  /** Blob-writer task FileSystem: the RAW layer when the scheme's FS is
-    * checksummed (file:// — Hadoop's ChecksumFileSystem writes a `.crc`
-    * sidecar per file, DOUBLING every create/rename/delete of a blob
-    * landing; r19 measured the sidecars as half of all files in every
-    * landing dir). The blobs' integrity story does not ride the
-    * sidecars: every landing is manifest-described with content digests
-    * derived through the validating readers, and the gates re-walk the
-    * on-disk bytes. HDFS/S3A pass through unchanged (their checksumming
-    * is server-side, not a client sidecar). Per-path resolution, no
-    * global FileSystem-cache mutation. */
-  private[graft] def blobFs(dir: String,
-      conf: org.apache.hadoop.conf.Configuration)
-      : org.apache.hadoop.fs.FileSystem =
-    new Path(dir).getFileSystem(conf) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-      case f => f
-    }
 
   /** The distributed blob-landing pass shared by the full writer and the
     * incremental sync: each task writes its partition's blobs via
@@ -565,7 +566,7 @@ object ShardWriter {
       .as[(Long, Array[Byte])]
       .foreachPartition { it: Iterator[(Long, Array[Byte])] =>
         if (it.hasNext) {
-          val tfs = blobFs(dir, conf.value)
+          val tfs = new Path(dir).getFileSystem(conf.value)
           it.foreach { case (shard, data) =>
             require(shard >= 0L, s"file sink requires non-negative shard ids: $shard")
             writeBlob(tfs, dir, f"shard-$shard%05d.$ext", data)

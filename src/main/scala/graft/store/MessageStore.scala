@@ -15,12 +15,16 @@ import graft.operators.BrokerQueries.MsgRef
   * partition value), which replaces the reference's stateful BucketManager
   * entirely (SURVEY §4): bucket routing is a map-stage expression, late
   * rows land in their historical bucket by construction (R2 — no watermark
-  * on the persist path), and Catalyst prunes bucket directories from `ts`
-  * predicates because the bucket is a monotone function of ts.
+  * on the persist path), and a time-bounded read picks its bucket
+  * directories by name because the bucket is a monotone function of ts.
   *
-  * At 100 TB: stream-part query pruning happens at the directory level
-  * before any I/O; per-bucket file counts stay bounded by the ingest
-  * micro-batch cadence (one file per bucket per batch per writer task);
+  * Every serving read ([[requestLastBounded]], [[openStreamPart]]) lists
+  * one stream-part directory and scans only the buckets it selects; the
+  * merge-on-read decision for those buckets is made in one place (the
+  * private `scan`). At 100 TB: a request's I/O is bounded by its own
+  * stream-part and window, never the store; per-bucket file counts stay
+  * bounded by the ingest micro-batch cadence (one file per bucket per
+  * batch per writer task);
   * retention is a metadata-only directory drop, mirroring the reference's
   * bucket-granular DELETE (`DeleteExpiredCmd.ts:135-161`).
   */
@@ -48,8 +52,8 @@ object MessageStore {
     * even with thousands of hot streams — a per-stream chain would rebuild
     * the giant-literal-tree problem CentroidRank exists to avoid.
     *
-    * Only [[DayBucket]]/[[HourBucket]] are accepted: [[pruneTimeMixed]]'s
-    * bound math and the bounded read's day-grouping are proven for exactly
+    * Only [[DayBucket]]/[[HourBucket]] are accepted: [[openStreamPart]]'s
+    * bucket-name window and the bounded read's day-grouping are proven for exactly
     * these two widths — an unvalidated coarser pattern (e.g. month) would
     * silently prune in-range buckets. */
   def bucketOfPerStream(ts: Column, streamId: Column,
@@ -68,7 +72,7 @@ object MessageStore {
 
   /** Driver-held (stream, UTC day) → bucket-width memory for the width
     * guard: a steady ingest query appends to the same streams batch after
-    * batch, and without this every [[appendPerStream]] re-lists every
+    * batch, and without this every [[append]] re-lists every
     * touched stream's bucket directories — at thousands of buckets per
     * stream that's a per-micro-batch driver FS sweep for information that
     * never changes (a day's width is fixed for its lifetime). The cache is
@@ -117,42 +121,31 @@ object MessageStore {
     def clear(): Unit = synchronized { known.clear(); listed.clear() }
   }
 
-  /** Append a message batch into the partitioned layout.
+  /** Append a message batch into the partitioned layout, bucketed per
+    * stream (see [[bucketOfPerStream]]): streams in `granularityFor` get
+    * their own width, all others `default`. Pass a [[BucketWidthCache]]
+    * from a long-lived ingest query so the width guard stops re-listing
+    * bucket directories on every micro-batch.
     *
     * The repartition on the partition columns is load-bearing at scale:
     * without it every write task emits a file into every bucket directory
     * (tasks × buckets small files); with it each bucket is written by
     * exactly one task — one file per bucket per batch. */
-  def append(messages: DataFrame, path: String, granularity: String = DayBucket,
-      widthCache: Option[BucketWidthCache] = None): Unit = {
-    require(granularity == DayBucket || granularity == HourBucket,
-      s"unsupported bucket granularity '$granularity' (supported: $DayBucket, $HourBucket)")
-    // same width guard as appendPerStream — without it this entrypoint
-    // could still write a second width onto an occupied day (free on a
-    // fresh store: the guard returns before any job when no root exists)
-    val touched = requireConsistentWidths(messages, path, Map.empty, granularity, widthCache)
-    appendWith(messages, path, bucketOf(col("ts"), granularity))
-    widthCache.foreach(c => touched.foreach { case (s, d) => c.record(s, d, granularity) })
-  }
-
-  /** [[append]] with per-stream bucket granularity (see
-    * [[bucketOfPerStream]]). Pass a [[BucketWidthCache]] from a long-lived
-    * ingest query so the width guard stops re-listing bucket directories
-    * on every micro-batch. */
-  def appendPerStream(messages: DataFrame, path: String,
-      granularityFor: Map[String, String],
+  def append(messages: DataFrame, path: String,
+      granularityFor: Map[String, String] = Map.empty,
       default: String = DayBucket,
       widthCache: Option[BucketWidthCache] = None): Unit = {
+    // built first: an unsupported width is rejected before the guard runs
+    val bucket = bucketOfPerStream(col("ts"), col("stream_id"), granularityFor, default)
     val touched =
       requireConsistentWidths(messages, path, granularityFor, default, widthCache)
-    appendWith(messages, path,
-      bucketOfPerStream(col("ts"), col("stream_id"), granularityFor, default))
+    appendWith(messages, path, bucket)
     widthCache.foreach(c => touched.foreach { case (s, d) =>
       c.record(s, d, granularityFor.getOrElse(s, default))
     })
   }
 
-  /** Replay dedup is bucket-local — [[openMerged]] keys the merge window on
+  /** Replay dedup is bucket-local — every read's merge window is keyed on
     * uniqueKey + bucket, and the clean-marker fast paths skip the window
     * entirely — so a key replayed AFTER its stream flips day↔hour would
     * land in a different-width bucket than its original row and survive as
@@ -163,9 +156,9 @@ object MessageStore {
     * migration stays legal (flip a stream's width starting from a day with
     * no data yet). Cost per micro-batch: one distinct aggregate over the
     * batch (streams × days — micro-batch-bounded) plus a bucket listing of
-    * just the affected stream directories, the same metadata sweep
-    * [[openMerged]] performs — and with a [[BucketWidthCache]] the listing
-    * happens once per stream per query lifetime instead of per batch.
+    * just the affected stream directories, the same metadata sweep a read
+    * performs — and with a [[BucketWidthCache]] the listing happens once
+    * per stream per query lifetime instead of per batch.
     * Returns the batch's touched (stream, day) pairs so the caller can
     * record them into the cache after the append lands. */
   private def requireConsistentWidths(messages: DataFrame, path: String,
@@ -206,11 +199,8 @@ object MessageStore {
             } else {
               // bucket name widths present per day, across all partitions of
               // the stream: day names are 10 chars, hour names 13
-              val existing = (for {
-                part <- fs.listStatus(streamDir) if part.isDirectory
-                b <- fs.listStatus(part.getPath)
-                if b.isDirectory && b.getPath.getName.startsWith("bucket=")
-              } yield b.getPath.getName.stripPrefix("bucket=")).toSeq
+              val existing = fs.listStatus(streamDir).toSeq.filter(_.isDirectory)
+                .flatMap(part => listBuckets(fs, part.getPath)).map(_.name)
               // the one listing feeds the cache with EVERY day's widths, so
               // later batches touching other days of this stream stay warm
               cache.foreach(_.putListing(stream,
@@ -266,37 +256,35 @@ object MessageStore {
     * physically (the sstable-compaction analog), making the merge window
     * cheap again. The one-shuffle window is the price of upsert-exact
     * answers; scans that tolerate at-least-once duplicates (e.g. byte-rate
-    * monitoring) can read [[open]] directly. The window's partition key is
-    * the uniqueness key PLUS the bucket column: bucket is a function of ts
-    * (constant within every uniqueness group, so grouping is unchanged),
-    * and listing it as a partition key is what lets [[pruneTime]]'s bucket
-    * predicate push below the window to the directory-pruning scan —
-    * Catalyst cannot infer that itself. */
+    * monitoring) can read [[open]] directly. Every bucket of every
+    * stream-part goes through the same clean/dirty scan as the serving
+    * reads ([[openStreamPart]]); columns in `StreamMessage.schema` order,
+    * empty when the store holds no bucket. */
   def openMerged(spark: SparkSession, path: String): DataFrame = {
-    val store = open(spark, path)
-    if (!store.columns.contains("bucket"))
-      return graft.dedup.Dedup.ingestDedup(store, graft.model.StreamMessage.uniqueKey)
-    val key = graft.model.StreamMessage.uniqueKey :+ "bucket"
-    // Replays can only exist in buckets that received appends after their
-    // last compaction ([[compactBucket]] purges them and stamps a _clean
-    // marker recording the committed file count — any later append changes
-    // the count and voids the marker). Split the scan: clean buckets read
-    // window-free, only dirty buckets pay the merge shuffle — so the
-    // steady post-compaction state serves at plain-scan cost, the engine
-    // analog of Cassandra upserts being free after sstable compaction.
-    // The cleanliness sweep is driver-side FS metadata, the same listing
-    // Spark's file index performs for any read; a production deployment
-    // would serve it from the manifest/metastore instead.
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (clean, dirty) = bucketDirs(fs, new Path(path))
-      .partition(b => isCleanBucket(fs, b))
-    if (dirty.isEmpty && clean.nonEmpty) return store
-    if (clean.isEmpty) return graft.dedup.Dedup.ingestDedup(store, key)
-    val base = spark.read.option("basePath", path)
-    val cleanScan = base.parquet(clean.map(_.toString): _*)
-    val mergedScan = graft.dedup.Dedup.ingestDedup(
-      base.parquet(dirty.map(_.toString): _*), key)
-    cleanScan.unionByName(mergedScan)
+    val root = new Path(path)
+    scan(spark, path,
+      bucketDirs(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root))
+  }
+
+  /** One stream-part's upsert view (see [[openMerged]]), read from only
+    * the part's buckets that can hold rows in the optional ts window
+    * `[fromMs, toMs]` — the reference's per-stream-part, bucket-bounded
+    * queries (`Storage.ts:101-410,452-576`). The window is chosen on bucket
+    * names and is exact for any per-stream mix of day and hour buckets: a
+    * bucket is kept when its name is ≥ the UTC day of `from` (a day name
+    * sorts at or below all its hour names, so every bucket that can hold
+    * rows ≥ from survives, at the cost of at most one extra day of hour
+    * buckets) and ≤ the UTC hour of `to` (a day name is a proper prefix of
+    * its hour names, so the boundary day's bucket of either width survives
+    * while whole hour buckets past `to` drop). Rows inside the kept buckets
+    * are not filtered: the caller's ts predicates keep answers exact. */
+  def openStreamPart(spark: SparkSession, path: String, streamId: String,
+      partition: Int, fromMs: Option[Long] = None,
+      toMs: Option[Long] = None): DataFrame = {
+    val lower = fromMs.map(bucketStr(_, DayBucket))
+    val upper = toMs.map(bucketStr(_, HourBucket))
+    scan(spark, path, partBuckets(spark, path, streamId, partition)
+      .filter(b => lower.forall(b.name >= _) && upper.forall(b.name <= _)))
   }
 
   /** Marker file a committed compaction stamps into its bucket directory:
@@ -343,52 +331,95 @@ object MessageStore {
       }
     } catch { case _: java.io.IOException => false }
 
-  /** All live bucket directories under the store root. */
-  private def bucketDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path): Seq[Path] =
-    (for {
-      stream <- fs.listStatus(root) if stream.isDirectory
-      if stream.getPath.getName.startsWith("stream_id=")
-      part <- fs.listStatus(stream.getPath) if part.isDirectory
-      bucket <- fs.listStatus(part.getPath)
-      if bucket.isDirectory && bucket.getPath.getName.startsWith("bucket=")
-    } yield bucket.getPath).toSeq
-
-  /** Inject the bucket partition predicate implied by a ts bound. Catalyst
-    * does NOT infer `bucket >= trunc(from)` from `ts >= from` (the bucket
-    * is our derived column), so without this a time-bounded read of a
-    * year-deep stream-part still lists and footer-reads every bucket
-    * directory; with it, directory-level partition pruning kicks in before
-    * any I/O. The bucket value is a monotone truncation of ts, so bounding
-    * by the truncated endpoints is exact: the lower bound's floor IS the
-    * reference's covering-first-bucket trick (`BucketManager.ts:228-264` —
-    * the bucket containing `from` can hold earlier rows, and row-level ts
-    * predicates still filter inside it). */
-  def pruneTime(store: DataFrame, fromMs: Option[Long], toMs: Option[Long],
-      granularity: String = DayBucket): DataFrame = {
-    if (!store.columns.contains("bucket")) return store
-    val b = col("bucket").cast("string")
-    val lower = fromMs.map(ms => b >= bucketStr(ms, granularity))
-    val upper = toMs.map(ms => b <= bucketStr(ms, granularity))
-    (lower ++ upper).reduceOption(_ && _).map(store.filter).getOrElse(store)
+  /** One live bucket directory: its (unescaped) partition value, its path,
+    * and whether its `_clean` marker is valid — checked lazily, so only
+    * the buckets a read selects pay the marker listing. */
+  private final class Bucket(val name: String, val path: Path,
+      fs: org.apache.hadoop.fs.FileSystem) {
+    lazy val clean: Boolean = isCleanBucket(fs, path)
   }
 
-  /** [[pruneTime]] that is exact for ANY per-stream mix of day and hour
-    * buckets in one store: the lower bound is floored to the coarsest
-    * granularity (a day name is ≤ all its hour names, so every bucket that
-    * can hold rows ≥ from survives) and the upper bound rendered in the
-    * finest (a day name is a proper prefix of its hour names, so the
-    * boundary day's bucket of either width survives while whole hour
-    * buckets past `to` still prune). Costs at most one extra day of hour
-    * buckets at the lower edge versus granularity-exact pruning; row-level
-    * ts predicates keep the answer exact either way. */
-  def pruneTimeMixed(store: DataFrame, fromMs: Option[Long],
-      toMs: Option[Long]): DataFrame = {
-    if (!store.columns.contains("bucket")) return store
-    val b = col("bucket").cast("string")
-    val lower = fromMs.map(ms => b >= bucketStr(ms, DayBucket))
-    val upper = toMs.map(ms => b <= bucketStr(ms, HourBucket))
-    (lower ++ upper).reduceOption(_ && _).map(store.filter).getOrElse(store)
+  /** The live buckets of one stream-part directory (none when it does not
+    * exist). Hidden `.bucket=…` compaction twins are not buckets. */
+  private def listBuckets(fs: org.apache.hadoop.fs.FileSystem,
+      partDir: Path): Seq[Bucket] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+    val entries =
+      try fs.listStatus(partDir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    entries.collect {
+      case s if s.isDirectory && s.getPath.getName.startsWith("bucket=") =>
+        new Bucket(unescapePathName(s.getPath.getName.stripPrefix("bucket=")),
+          s.getPath, fs)
+    }
+  }
+
+  private def partDir(path: String, streamId: String, partition: Int): Path = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    new Path(s"$path/stream_id=${escapePathName(streamId)}/stream_partition=$partition")
+  }
+
+  private def partBuckets(spark: SparkSession, path: String, streamId: String,
+      partition: Int): Seq[Bucket] = {
+    val dir = partDir(path, streamId, partition)
+    listBuckets(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
+  }
+
+  /** All live buckets under the store root. */
+  private def bucketDirs(fs: org.apache.hadoop.fs.FileSystem,
+      root: Path): Seq[Bucket] =
+    if (!fs.exists(root)) Nil
+    else for {
+      stream <- fs.listStatus(root).toSeq
+      if stream.isDirectory && stream.getPath.getName.startsWith("stream_id=")
+      part <- fs.listStatus(stream.getPath) if part.isDirectory
+      bucket <- listBuckets(fs, part.getPath)
+    } yield bucket
+
+  /** Every store read's schema: the message columns plus `bucket`, given
+    * up front so a read runs no schema-inference pass and no directory
+    * value is type-guessed (a day name would otherwise come back as DATE,
+    * a numeric stream id as INT). */
+  private val readSchema =
+    graft.model.StreamMessage.schema.add("bucket", "string")
+
+  private def reader(spark: SparkSession, path: String) =
+    spark.read.schema(readSchema).option("basePath", path)
+
+  private def emptyRelation(spark: SparkSession): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      graft.model.StreamMessage.schema)
+
+  /** The one merge-on-read decision, for every read of the store. Replays
+    * can only exist in buckets that received appends after their last
+    * compaction ([[compactBucket]] purges them and stamps a `_clean` marker
+    * recording the committed file count — any later append changes the
+    * count and voids the marker). So clean buckets read window-free and
+    * only dirty buckets pay the merge shuffle, keyed on the uniqueness key
+    * plus `bucket` (bucket-local, like compaction; the append width guard
+    * keeps a key's replays in one bucket). The steady post-compaction state
+    * serves at plain-scan cost, the engine analog of Cassandra upserts
+    * being free after sstable compaction.
+    *
+    * An append landing between the marker check and plan execution could
+    * put a replay into a scan already planned window-free: accepted as
+    * eventual consistency for serving reads — the same read raced against
+    * the append could equally have run a moment earlier and missed the row
+    * entirely, and the duplicate is gone on the next read (the marker is
+    * void from then on). Columns in `StreamMessage.schema` order; the empty
+    * relation for no buckets. */
+  private def scan(spark: SparkSession, path: String,
+      buckets: Seq[Bucket]): DataFrame = {
+    def read(bs: Seq[Bucket]) = reader(spark, path).parquet(bs.map(_.path.toString): _*)
+    val (clean, dirty) = buckets.partition(_.clean)
+    val parts =
+      (if (clean.isEmpty) Nil else Seq(read(clean))) ++
+        (if (dirty.isEmpty) Nil
+         else Seq(graft.dedup.Dedup.ingestDedup(read(dirty),
+           graft.model.StreamMessage.uniqueKey :+ "bucket")))
+    parts.reduceOption(_ unionByName _)
+      .map(_.select(graft.model.StreamMessage.schema.fieldNames.map(col(_)): _*))
+      .getOrElse(emptyRelation(spark))
   }
 
   private def bucketStr(ms: Long, granularity: String): String =
@@ -405,19 +436,13 @@ object MessageStore {
         sum(octet_length(col("payload"))).as("size"),
         max(col("ts")).as("max_ts"))
 
-  /** Buckets whose MAX(ts) is older than the cutoff — the data-aware
-    * expiry rule (F9, `DeleteExpiredCmd.ts:135-161`). */
-  def expiredBuckets(store: DataFrame, cutoff: MsgRef): DataFrame =
-    bucketStats(store)
-      .filter(col("max_ts") < cutoff.ntz)
-      .select(col("stream_id"), col("stream_partition"), col("bucket"))
-
   /** Bounded last-N over the physical layout — the reference's iterative
     * bucket expansion (`Storage.ts:142-181`): per-bucket row counts decide
-    * how many newest buckets cover `limit`, then top-K over just those
-    * buckets. A deep stream-part answers last-N from its newest buckets
-    * instead of scanning years of history. Falls back to the whole part
-    * when it holds fewer than `limit` rows.
+    * how many newest buckets cover `limit` (clamped to
+    * [[graft.operators.BrokerQueries.MaxResendLast]]), then top-K over just
+    * those buckets. A deep stream-part answers last-N from its newest
+    * buckets instead of scanning years of history. Falls back to the whole
+    * part when it holds fewer than `limit` rows.
     *
     * All bucket counts come from ONE distributed job (a groupBy on the
     * `bucket` partition column reads parquet footers only — no data
@@ -427,26 +452,15 @@ object MessageStore {
   def requestLastBounded(
       spark: SparkSession, path: String, streamId: String, partition: Int,
       limit: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
     import graft.operators.BrokerQueries
-    val partDir = new Path(
-      s"$path/stream_id=${escapePathName(streamId)}/stream_partition=$partition")
-    val fs = partDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def emptyRelation = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      graft.model.StreamMessage.schema)
-    if (!fs.exists(partDir)) return emptyRelation
-    val bucketDirs = fs.listStatus(partDir)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map(p => unescapePathName(p.getPath.getName.stripPrefix("bucket=")) ->
-        p.getPath.toString)
-      .toMap
-    if (bucketDirs.isEmpty) return emptyRelation
+    val buckets = partBuckets(spark, path, streamId, partition)
+    if (buckets.isEmpty) return emptyRelation(spark)
+    val clamped = math.min(math.max(limit, 0), BrokerQueries.MaxResendLast)
     // one job: per-bucket counts, newest first (bucket format is sortable)
-    val counts = spark.read.parquet(partDir.toString)
+    val counts = reader(spark, path).parquet(partDir(path, streamId, partition).toString)
       .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
       .collect()
-      .map(r => String.valueOf(r.get(0)) -> r.getLong(1))
+      .map(r => r.getString(0) -> r.getLong(1))
     // coverage selection works in whole UTC days (the first 10 chars of
     // either bucket format): when a stream's granularity changed mid-day,
     // a day bucket and that day's hour buckets coexist and overlap in
@@ -456,65 +470,30 @@ object MessageStore {
     val dayGroups = counts.groupBy(_._1.take(10)).toSeq
       .sortBy(_._1)(Ordering[String].reverse)
     var covered = 0L
-    val needed = dayGroups.takeWhile { case (_, bs) =>
-      val take = covered < limit
+    val neededNames = dayGroups.takeWhile { case (_, bs) =>
+      val take = covered < clamped
       if (take) covered += bs.map(_._2).sum
       take
-    }.flatMap(_._2).flatMap { case (b, _) => bucketDirs.get(b) }
-    if (needed.isEmpty) return emptyRelation
+    }.flatMap(_._2).map(_._1).toSet
+    val needed = buckets.filter(b => neededNames.contains(b.name))
+    if (needed.isEmpty) return emptyRelation(spark)
     // result rows are clamped to MaxResendLast (10k) by contract, so the
     // answer is collected once — the widen check below would otherwise
     // re-execute the whole dedup+top-K job when the caller consumes the
     // returned frame (count + lazy re-read = 2× the serving latency)
-    def lastOver(paths: Seq[String]): Array[org.apache.spark.sql.Row] = {
-      // compacted buckets hold no replays (marker voided by any append), so
-      // a read covered entirely by clean buckets skips the dedup window —
-      // the common steady-state serve is scan + top-K only. An append
-      // landing between this sweep and plan execution could put a replay
-      // into a scan already planned window-free: accepted as
-      // eventual-consistency for serving reads — the same read raced
-      // against the append could equally have run a moment earlier and
-      // missed the row entirely, and the duplicate is gone on the next
-      // read (the marker is void from then on). Readers that need
-      // serialized exactness take [[openMerged]]'s always-merged path.
-      val dedup = !paths.forall(p => isCleanBucket(fs, new Path(p)))
-      boundedLastPlan(spark, paths, streamId, partition, limit, dedup).collect()
-    }
-    val res = lastOver(needed.toIndexedSeq)
+    def lastOver(bs: Seq[Bucket]): Array[org.apache.spark.sql.Row] =
+      BrokerQueries.requestLast(scan(spark, path, bs), streamId, partition, limit)
+        .collect()
+    val res = lastOver(needed)
     // physical per-bucket counts over-count replayed rows, so the covering
     // buckets can hold fewer UNIQUE rows than `limit`; widen to the whole
     // part in that (rare — only with replays in the tail buckets) case
-    val clamped = math.min(math.max(limit, 0), BrokerQueries.MaxResendLast)
     val rows =
-      if (needed.length < bucketDirs.size && res.length < clamped)
-        lastOver(bucketDirs.values.toIndexedSeq)
+      if (needed.length < buckets.size && res.length < clamped) lastOver(buckets)
       else res
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
       if (rows.isEmpty) graft.model.StreamMessage.schema else rows.head.schema)
-  }
-
-  /** The dedup+top-K plan [[requestLastBounded]] executes over its covering
-    * bucket directories — extracted so the plan contract can be asserted on
-    * the REAL physical read path (the bounded read collects eagerly, so its
-    * returned relation is driver-local and plan-opaque). */
-  private[graft] def boundedLastPlan(
-      spark: SparkSession, paths: Seq[String], streamId: String,
-      partition: Int, limit: Int, dedup: Boolean = true): DataFrame = {
-    import graft.operators.BrokerQueries
-    val subset = spark.read.parquet(paths: _*)
-      .withColumn("stream_id", lit(streamId))
-      .withColumn("stream_partition", lit(partition))
-      // canonical column order: the empty-store early returns use
-      // StreamMessage.schema, so the non-empty path must not leak the
-      // parquet read order (data columns first, stream-part appended)
-      .select(graft.model.StreamMessage.schema.fieldNames.map(col(_)): _*)
-    // merge-on-read (see [[openMerged]]): replayed publishes collapse to
-    // one logical row before the top-K; skipped when every covering bucket
-    // is marker-clean (no replays can exist)
-    BrokerQueries.requestLast(
-      if (dedup) graft.dedup.Dedup.ingestDedup(subset) else subset,
-      streamId, partition, limit)
   }
 
   /** Compact one stream-part's buckets: micro-batch ingest leaves one file
@@ -548,18 +527,15 @@ object MessageStore {
   def compactStreamPart(
       spark: SparkSession, path: String, streamId: String, partition: Int,
       targetFiles: Int = 1, minFiles: Int = 2): Int = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    val partDir = new Path(
-      s"$path/stream_id=${escapePathName(streamId)}/stream_partition=$partition")
-    val fs = partDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(partDir)) return 0
+    val dir = partDir(path, streamId, partition)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) return 0
     // every compaction entry point recovers crash states first (the
     // policy sweep and Engine.compact used to compensate caller-side;
     // a hidden-live or blocked-trash bucket must never silently skip)
     recoverCompaction(spark, path)
-    val buckets = fs.listStatus(partDir).filter(_.isDirectory)
-      .filter(_.getPath.getName.startsWith("bucket="))
-    buckets.count(b => compactBucket(spark, fs, b.getPath, targetFiles, minFiles))
+    listBuckets(fs, dir)
+      .count(b => compactBucket(spark, fs, b.path, targetFiles, minFiles))
   }
 
   /** Policy-driven compaction across the whole store: compact exactly the
@@ -584,8 +560,8 @@ object MessageStore {
     // recover first; recovery is idempotent and metadata-only when clean
     recoverCompaction(spark, path)
     bucketDirs(fs, root).count { b =>
-      parquetFileCount(fs, b) >= maxFilesPerBucket &&
-        compactBucket(spark, fs, b, targetFiles, minFiles = maxFilesPerBucket)
+      parquetFileCount(fs, b.path) >= maxFilesPerBucket &&
+        compactBucket(spark, fs, b.path, targetFiles, minFiles = maxFilesPerBucket)
     }
   }
 
@@ -815,11 +791,9 @@ object MessageStore {
     * than wall-clock TTL would — acceptable for the transient-relay use
     * the reference puts TTL writes to. Returns dropped bucket paths. */
   def dropAgedBuckets(
-      spark: SparkSession, path: String, cutoff: MsgRef,
-      granularity: String = DayBucket): Seq[String] = {
+      spark: SparkSession, path: String, cutoff: MsgRef): Seq[String] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
     // each bucket expires against ITS OWN width, parsed from the name
     // (day names are 10 chars, hour names 13): a bucket is deletable iff
     // every instant it can contain is before the cutoff, i.e. its
@@ -827,8 +801,8 @@ object MessageStore {
     // unsound in a per-stream mixed store — a day name is a PREFIX of its
     // hour names, so "2024-01-15" < "2024-01-15-15" would delete a day
     // bucket whose tail rows are younger than an intra-day cutoff (the
-    // hazard pruneTimeMixed handles on the read path). `granularity` is
-    // retained for signature stability; the width decision is per name.
+    // hazard [[openStreamPart]]'s bucket-name window handles on the read
+    // path).
     // total on malformed input: a right-length-but-unparseable name (a
     // corrupted directory, a foreign file) is SKIPPED like wrong-length
     // names are, never deletes, never aborts the sweep mid-way
@@ -844,16 +818,8 @@ object MessageStore {
         end.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
       }.toOption
     }
-    val dropped = for {
-      stream <- fs.listStatus(root) if stream.isDirectory
-      part <- fs.listStatus(stream.getPath) if part.isDirectory
-      bucket <- fs.listStatus(part.getPath)
-      name = bucket.getPath.getName
-      if bucket.isDirectory && name.startsWith("bucket=")
-      end <- bucketEndMs(name.stripPrefix("bucket="))
-      if end <= cutoff.tsMs
-      if fs.delete(bucket.getPath, true)
-    } yield bucket.getPath.toString
-    dropped.toSeq
+    bucketDirs(fs, root)
+      .filter(b => bucketEndMs(b.name).exists(_ <= cutoff.tsMs) && fs.delete(b.path, true))
+      .map(_.path.toString)
   }
 }

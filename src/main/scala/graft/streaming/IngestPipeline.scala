@@ -83,7 +83,7 @@ object IngestPipeline {
       // micro-batch without restarting the query (StorageConfig.ts:96-149)
       val prepared = prepareBatch(batch, nowMs, assigned()).cache()
       try {
-        MessageStore.appendPerStream(prepared, storePath, granularityFor,
+        MessageStore.append(prepared, storePath, granularityFor,
           widthCache = widthCache)
         // the marker doubles as the batch-statistics record (A10): rows,
         // commit time, and the batch's ts span — IngestStats aggregates

@@ -271,8 +271,7 @@ object StreamShardEmit {
       .as[(String, Long, Array[Byte])]
       .foreachPartition { it: Iterator[(String, Long, Array[Byte])] =>
         if (it.hasNext) {
-          // raw FS on checksummed schemes — see [[ShardWriter.blobFs]]
-          val tfs = ShardWriter.blobFs(dir, conf.value)
+          val tfs = new Path(dir).getFileSystem(conf.value)
           it.foreach { case (stream, seq, data) =>
             // the stream id becomes a file-name component: reject path
             // metacharacters instead of silently mangling them

@@ -43,6 +43,16 @@ class BenchLineSpec extends AnyFunSuite {
     assert(line.contains(""""contended":true"""))
   }
 
+  test("a byte budget below any line still keeps the single slowest query") {
+    val line = Bench.shortLine(total = 99.9, results = fakeResults(273),
+      sfDir = "/root/testdata/sf0.1", runs = 2, canary = 0.2,
+      canaryExpected = 0.15, contended = false, contendedQs = Nil,
+      floorViol = Nil, healedN = 0, recordPath = "target/bench.json",
+      maxBytes = 100)
+    assert(line.contains(""""queries":{"q_some_rather_long_query_name_273":10.1}"""),
+      line)
+  }
+
   test("failed queries (-1 sentinel) never displace real slow entries") {
     val rs = fakeResults(50) ++ Seq("q_dead" -> -1.0)
     val line = Bench.shortLine(total = 10.0, results = rs,

@@ -50,6 +50,48 @@ class EngineSpec extends SparkSpec {
     assert(engine.last("s", 0, 10).toSeq == Seq(Resend.NoResend()))
   }
 
+  test("from/range/metadata answer from their own stream-part in a two-stream store") {
+    val engine = new GraftEngine(spark,
+      Files.createTempDirectory("graft-engine-parts").toString)
+    val dayMs = 86400000L
+    val now = 10 * dayMs
+    // streams a and b, three day buckets each; b carries larger payloads
+    assert(engine.publish(streamDataOf((0 until 3).flatMap { d =>
+      Seq(msg("a", 0, d * dayMs + 1000L, d),
+        msg("b", 0, d * dayMs + 1000L, d, payload = "{\"big\":true}"))
+    }: _*), now) == 6)
+    def seqs(frames: Iterator[Resend.Frame]) =
+      frames.collect { case Resend.Unicast(m) => m }.size
+    assert(seqs(engine.from("a", 0, MsgRef(dayMs, 0))) == 2)
+    assert(seqs(engine.range("a", 0, MsgRef(dayMs, 0), MsgRef(dayMs + 1000L, 9))) == 1)
+    assert(engine.metadata("a", 0) == Some((3L, 6L, 1000L, 2 * dayMs + 1000L)))
+    assert(engine.metadata("b", 0).get._2 == 3L * "{\"big\":true}".length)
+    assert(engine.metadata("a", 1).isEmpty)
+  }
+
+  test("after retention empties the store, reads answer empty instead of throwing") {
+    val engine = new GraftEngine(spark,
+      Files.createTempDirectory("graft-engine-emptied").toString)
+    val now = 10000L
+    assert(engine.publish(streamDataOf(msg("s", 0, 1000L, 0)), now) == 1)
+    assert(engine.deleteExpired(retentionDays = 0, nowMs = now).nonEmpty)
+    assert(engine.metadata("s", 0).isEmpty)
+    assert(engine.from("s", 0, MsgRef(0L, 0)).toSeq == Seq(Resend.NoResend()))
+    assert(engine.range("s", 0, MsgRef(0L, 0), MsgRef(now, 0)).toSeq ==
+      Seq(Resend.NoResend()))
+    assert(engine.last("s", 0, 10).toSeq == Seq(Resend.NoResend()))
+    assert(engine.table.count() == 0)
+    // emptiness comes from the listing, not from a swallowed read error: a
+    // bucket holding an unreadable file fails the read loudly
+    val bucket = new java.io.File(engine.storePath,
+      "stream_id=s/stream_partition=0/bucket=1970-01-01")
+    assert(bucket.mkdirs())
+    Files.write(new java.io.File(bucket, "part-0.parquet").toPath,
+      "junk".getBytes("UTF-8"))
+    intercept[Exception](engine.metadata("s", 0))
+    intercept[Exception](engine.from("s", 0, MsgRef(0L, 0)).toSeq)
+  }
+
   test("per-stream retention: each stream expires against its own storageDays") {
     val engine = new GraftEngine(spark,
       Files.createTempDirectory("graft-perstream").toString)

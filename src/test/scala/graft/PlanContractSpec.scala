@@ -352,8 +352,9 @@ class PlanContractSpec extends SparkSpec {
 
   test("bounded last-N physical read path: partitioned window, no cartesian") {
     // build a tiny real store once, then assert on the ACTUAL inner
-    // dedup+top-K plan requestLastBounded executes over its covering
-    // bucket directories — the eager collect in the public API hides it
+    // dedup+top-K plan requestLastBounded executes: the top-K over the
+    // stream-part read of its covering buckets (all buckets here, all
+    // dirty) — the eager collect in the public API hides it
     import org.apache.spark.sql.functions.col
     val path = java.nio.file.Files.createTempDirectory("graft_plan_lb").toString
     val fsRoot = new org.apache.hadoop.fs.Path(path)
@@ -362,23 +363,15 @@ class PlanContractSpec extends SparkSpec {
         graft.sources.Tables.streamData(spark, sfDir)
           .filter(col("stream_id") === "click" && col("stream_partition") === 3),
         path)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val partDir = new org.apache.hadoop.fs.Path(
-        s"$path/stream_id=click/stream_partition=3")
-      val buckets = fs.listStatus(partDir)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-        .map(_.getPath.toString).toSeq
-      assert(buckets.nonEmpty)
-      val plan = graft.store.MessageStore
-        .boundedLastPlan(spark, buckets, "click", 3, 100)
+      val part = graft.store.MessageStore.openStreamPart(spark, path, "click", 3)
+      assert(part.inputFiles.nonEmpty)
+      val plan = graft.operators.BrokerQueries.requestLast(part, "click", 3, 100)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), s"bounded last-N plans a cartesian: $plan")
       // the merge-on-read dedup window must be key-partitioned, never a
-      // global (empty-partition-spec) window — stream_id/stream_partition
-      // are per-part literals here, so the optimizer folds them out of the
-      // spec and the partition key starts at ts
-      assert(plan.contains("windowspecdefinition(ts"),
+      // global (empty-partition-spec) window: its spec is the uniqueness
+      // key, which starts at the stream-part columns
+      assert(plan.contains("windowspecdefinition(stream_id"),
         s"dedup window lost its partition spec: $plan")
     } finally {
       fsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -230,4 +230,31 @@ class ShardWriterSpec extends SparkSpec {
       else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(e).exists(_.contains("null shard key")))
   }
+
+  test("sync over a stale .crc sidecar reads back through the checksummed FS") {
+    val s = spark
+    import s.implicits._
+    import org.apache.hadoop.fs.Path
+    val dir = java.nio.file.Files.createTempDirectory("graft-crc-landing").toString
+    def corpus(text: String) = Seq((0L, 0L, text.getBytes("UTF-8")))
+      .toDF("shard", "order", "payload")
+    ShardWriter.syncTfRecordShardFiles(corpus("v1"), dir)
+    // a landing written by an older checksummed writer: the blob carries a
+    // `.crc` sidecar describing its bytes
+    val lfs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    val blob = new Path(dir, "shard-00000.tfrecord")
+    val old = { val in = lfs.open(blob); try in.readAllBytes() finally in.close() }
+    val out = lfs.create(blob, true)
+    try out.write(old) finally out.close()
+    assert(lfs.exists(lfs.getChecksumFile(blob)))
+    // the sync rewrites the changed shard in place
+    val synced = ShardWriter.syncTfRecordShardFiles(corpus("v2, longer"), dir)
+    assert(synced.collect().map(_.getAs[Long]("rewritten")).toSeq == Seq(1L))
+    // the checksummed reader must see the new bytes, not a ChecksumException
+    val got = { val in = lfs.open(blob); try in.readAllBytes() finally in.close() }
+    val want = ShardWriter.emitTfRecordShards(corpus("v2, longer")).collect()
+      .head.getAs[Array[Byte]]("data")
+    assert(got.toSeq == want.toSeq)
+  }
 }

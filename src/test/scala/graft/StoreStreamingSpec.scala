@@ -16,6 +16,11 @@ class StoreStreamingSpec extends SparkSpec {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** The bucket directories a read's files come from, relative to the
+    * store root (`stream_id=…/stream_partition=…/bucket=…`). */
+  private def bucketsRead(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => f.substring(f.indexOf("stream_id="), f.lastIndexOf('/'))).toSet
+
   test("store roundtrip: bucket layout, late data routed to historical bucket") {
     val path = tmpDir("graft-store")
     MessageStore.append(streamDataOf(
@@ -255,12 +260,12 @@ class StoreStreamingSpec extends SparkSpec {
     // "2023-11-14" sorts BELOW "2023-11-14-10", but its tail row (15:00)
     // is younger than the cutoff — the bucket must survive
     val dropped = MessageStore.dropAgedBuckets(spark, path,
-      MsgRef(1699956000000L, 0), MessageStore.HourBucket)
+      MsgRef(1699956000000L, 0))
     assert(dropped.isEmpty)
     assert(keysOf(MessageStore.open(spark, path)).length == 2)
     // a cutoff past the day's exclusive end drops it
     val dropped2 = MessageStore.dropAgedBuckets(spark, path,
-      MsgRef(1700006400000L, 0), MessageStore.HourBucket) // 2023-11-15T00:00Z
+      MsgRef(1700006400000L, 0)) // 2023-11-15T00:00Z
     assert(dropped2.size == 1)
   }
 
@@ -346,20 +351,22 @@ class StoreStreamingSpec extends SparkSpec {
     // dirty exactly one bucket: replay b again + a genuinely new row
     MessageStore.append(
       streamDataOf(b, msg("s", 0, 1700000001000L + dayMs, 2)), path)
-    val merged = MessageStore.openMerged(spark, path)
-    val plan = merged.queryExecution.executedPlan.toString
+    // the store-wide view and the stream-part read make the same split:
     // union of a window-free clean scan and one windowed dirty scan
-    assert(plan.contains("Union") && plan.contains("Window"), plan)
-    assert(keysOf(merged).map(_._2).sorted == Seq(0, 1, 2))
-    // time pruning still reaches partition filters under the union+window
-    val pruned = MessageStore.pruneTime(merged,
-      Some(1700000000000L + dayMs), None)
-    val scans = pruned.queryExecution.sparkPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.partitionFilters.mkString(" AND ")
+    Seq(MessageStore.openMerged(spark, path),
+        MessageStore.openStreamPart(spark, path, "s", 0)).foreach { merged =>
+      val plan = merged.queryExecution.executedPlan.toString
+      assert(plan.contains("Union") && plan.contains("Window"), plan)
+      assert(keysOf(merged).map(_._2).sorted == Seq(0, 1, 2))
     }
-    assert(scans.nonEmpty && scans.forall(_.contains("bucket")), scans.mkString("; "))
-    assert(keysOf(pruned).map(_._2).sorted == Seq(1, 2))
+    // a time-bounded read keeps only the dirty day: the window, no union,
+    // and only that bucket's files
+    val windowed = MessageStore.openStreamPart(spark, path, "s", 0,
+      Some(1700000000000L + dayMs))
+    val plan = windowed.queryExecution.executedPlan.toString
+    assert(plan.contains("Window") && !plan.contains("Union"), plan)
+    assert(bucketsRead(windowed) == Set("stream_id=s/stream_partition=0/bucket=2023-11-15"))
+    assert(keysOf(windowed).map(_._2).sorted == Seq(1, 2))
   }
 
   test("requestLastBounded widens when replays deflate the covering buckets") {
@@ -431,30 +438,58 @@ class StoreStreamingSpec extends SparkSpec {
     assert(!trash.exists() && !nested.exists())
   }
 
-  test("pruneTime injects bucket partition filters for time-bounded reads") {
+  test("openStreamPart: a time-bounded read selects its buckets by name") {
     val path = tmpDir("graft-prunetime")
     MessageStore.append(streamDataOf(
       msg("s", 0, 1600000000000L, 0),   // bucket 2020-09-13
       msg("s", 0, 1700000000000L, 1)), path) // bucket 2023-11-14
-    val store = MessageStore.open(spark, path)
-    val pruned = MessageStore.pruneTime(store, Some(1690000000000L), None)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan)
-    // only the newer bucket's rows survive; correctness preserved
+    def files(df: org.apache.spark.sql.DataFrame) =
+      bucketsRead(df).map(_.stripPrefix("stream_id=s/stream_partition=0/"))
+    // only the newer bucket is read; correctness preserved
+    val pruned = MessageStore.openStreamPart(spark, path, "s", 0, Some(1690000000000L))
+    assert(files(pruned) == Set("bucket=2023-11-14"))
     assert(keysOf(pruned) == Seq((1700000000000L, 1, "publisher", "1")))
-    // widened-bound safety: a from inside a bucket keeps that bucket
-    val mid = MessageStore.pruneTime(store, Some(1700000005000L), None)
-    assert(mid.count() == 1)
-    // the merge-on-read window must NOT break directory pruning: bucket is
-    // a window partition key precisely so this predicate reaches the scan
-    val merged = MessageStore.pruneTime(
-      MessageStore.openMerged(spark, path), Some(1690000000000L), None)
-    val mergedScanFilters = merged.queryExecution.sparkPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.partitionFilters.mkString(" AND ")
-    }.mkString
-    assert(mergedScanFilters.contains("bucket"), mergedScanFilters)
-    assert(keysOf(merged) == Seq((1700000000000L, 1, "publisher", "1")))
+    // covering-bucket safety: a from inside a bucket keeps that bucket
+    val mid = MessageStore.openStreamPart(spark, path, "s", 0, Some(1700000005000L))
+    assert(files(mid) == Set("bucket=2023-11-14") && mid.count() == 1)
+    // an upper bound drops buckets past `to`; no bound reads the whole part
+    val upTo = MessageStore.openStreamPart(spark, path, "s", 0, None, Some(1690000000000L))
+    assert(files(upTo) == Set("bucket=2020-09-13"))
+    assert(files(MessageStore.openStreamPart(spark, path, "s", 0)).size == 2)
+    // the merge window sits on the selected buckets only (both are dirty:
+    // never compacted)
+    assert(pruned.queryExecution.executedPlan.toString.contains("Window"))
+    // a window that holds no bucket is the empty relation, not an error
+    val none = MessageStore.openStreamPart(spark, path, "s", 0, Some(1800000000000L))
+    assert(none.count() == 0 &&
+      none.columns.toSeq == StreamMessage.schema.fieldNames.toSeq)
+  }
+
+  test("stream-part reads list and scan only their own in-window buckets") {
+    val path = tmpDir("graft-part-read")
+    val dayMs = 86400000L
+    val base = 1700000000000L // 2023-11-14 22:13:20 UTC
+    // two streams, one with two partitions, three day buckets each
+    MessageStore.append(streamDataOf((0 until 3).flatMap { d =>
+      Seq(msg("a", 0, base + d * dayMs, d), msg("a", 1, base + d * dayMs, d),
+        msg("b", 0, base + d * dayMs, d))
+    }: _*), path)
+    def day(d: String) = s"stream_id=a/stream_partition=0/bucket=2023-11-$d"
+    def read(from: Option[Long], to: Option[Long]) =
+      MessageStore.openStreamPart(spark, path, "a", 0, from, to)
+    // metadata's read: the whole stream-part, no other part's files
+    val all = read(None, None)
+    assert(bucketsRead(all) == Set(day("14"), day("15"), day("16")))
+    assert(all.count() == 3)
+    // from's read: the buckets at or after from's UTC day
+    assert(bucketsRead(read(Some(base + dayMs + 1000L), None)) ==
+      Set(day("15"), day("16")))
+    // range's read: the buckets between from's day and to's hour
+    assert(bucketsRead(read(Some(base + dayMs), Some(base + dayMs + 1000L))) ==
+      Set(day("15")))
+    // an unknown stream-part lists nothing and reads nothing
+    val none = MessageStore.openStreamPart(spark, path, "c", 0)
+    assert(none.inputFiles.isEmpty && none.count() == 0)
   }
 
   test("per-stream bucket granularity: hot stream hour-bucketed, pruning stays exact") {
@@ -462,7 +497,7 @@ class StoreStreamingSpec extends SparkSpec {
     val base = 1700000000000L // 2023-11-14 22:13:20 UTC
     val hourMs = 3600000L
     // "hot" bucketed by hour, "cold" by day (default), same store
-    MessageStore.appendPerStream(streamDataOf(
+    MessageStore.append(streamDataOf(
       msg("hot", 0, base - 2 * hourMs, 0),   // 20:13 → bucket 2023-11-14-20
       msg("hot", 0, base, 1),                // 22:13 → bucket 2023-11-14-22
       msg("cold", 0, base - 2 * hourMs, 0),
@@ -472,22 +507,31 @@ class StoreStreamingSpec extends SparkSpec {
       .toSeq == Seq("bucket=2023-11-14-20", "bucket=2023-11-14-22"))
     assert(new java.io.File(s"$path/stream_id=cold/stream_partition=0").list()
       .toSeq == Seq("bucket=2023-11-14"))
-    // mixed-safe pruning from base-1h: hour bucket 20 prunes away, the
-    // boundary-day buckets of either width survive, answers exact
-    val store = MessageStore.open(spark, path)
-    val pruned = MessageStore.pruneTimeMixed(store, Some(base - hourMs), None)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"), plan)
-    import graft.operators.BrokerQueries
-    assert(keysOf(BrokerQueries.requestFrom(pruned, "hot", 0,
+    // mixed-safe bucket window from base-1h: the lower bound floors to the
+    // UTC day, so the boundary day's buckets of either width survive (hour
+    // bucket 20 is the one extra lower-edge read), answers exact
+    def buckets(df: org.apache.spark.sql.DataFrame) =
+      bucketsRead(df).map(b => b.substring(b.indexOf("bucket=")))
+    val hotFrom = MessageStore.openStreamPart(spark, path, "hot", 0, Some(base - hourMs))
+    assert(buckets(hotFrom) == Set("bucket=2023-11-14-20", "bucket=2023-11-14-22"))
+    assert(keysOf(BrokerQueries.requestFrom(hotFrom, "hot", 0,
       MsgRef(base - hourMs, 0))) == Seq((base, 1, "publisher", "1")))
-    assert(keysOf(BrokerQueries.requestFrom(
-      MessageStore.pruneTimeMixed(store, Some(base - hourMs), None),
-      "cold", 0, MsgRef(base - hourMs, 0))) == Seq((base, 1, "publisher", "1")))
-    // an upper bound prunes whole hour buckets past `to` but keeps the
+    val coldFrom = MessageStore.openStreamPart(spark, path, "cold", 0, Some(base - hourMs))
+    assert(buckets(coldFrom) == Set("bucket=2023-11-14"))
+    assert(keysOf(BrokerQueries.requestFrom(coldFrom, "cold", 0,
+      MsgRef(base - hourMs, 0))) == Seq((base, 1, "publisher", "1")))
+    // an upper bound drops whole hour buckets past `to` but keeps the
     // boundary day bucket
-    val upTo = MessageStore.pruneTimeMixed(store, None, Some(base - hourMs))
-    assert(keysOf(BrokerQueries.requestRange(upTo, "hot", 0,
+    val hotTo =
+      MessageStore.openStreamPart(spark, path, "hot", 0, None, Some(base - hourMs))
+    assert(buckets(hotTo) == Set("bucket=2023-11-14-20"))
+    assert(keysOf(BrokerQueries.requestRange(hotTo, "hot", 0,
+      MsgRef(0L, 0), MsgRef(base - hourMs, 99))) ==
+      Seq((base - 2 * hourMs, 0, "publisher", "1")))
+    val coldTo =
+      MessageStore.openStreamPart(spark, path, "cold", 0, None, Some(base - hourMs))
+    assert(buckets(coldTo) == Set("bucket=2023-11-14"))
+    assert(keysOf(BrokerQueries.requestRange(coldTo, "cold", 0,
       MsgRef(0L, 0), MsgRef(base - hourMs, 99))) ==
       Seq((base - 2 * hourMs, 0, "publisher", "1")))
     // bounded last-N selects whole UTC days, so mixed widths stay exact
@@ -500,12 +544,12 @@ class StoreStreamingSpec extends SparkSpec {
     val path = tmpDir("graft-width-guard")
     val base = 1700000000000L // 2023-11-14 22:13:20 UTC
     val dayMs = 86400000L
-    MessageStore.appendPerStream(streamDataOf(msg("s", 0, base, 0)), path, Map.empty)
+    MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path, Map.empty)
     // replay/append of the same day after a day→hour flip: would create a
     // second-width bucket whose replays the bucket-local merge window can
     // never collapse — rejected before any file lands
     val e = intercept[IllegalStateException] {
-      MessageStore.appendPerStream(streamDataOf(msg("s", 0, base, 0)), path,
+      MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path,
         Map("s" -> MessageStore.HourBucket))
     }
     assert(e.getMessage.contains("bucket-width conflict"), e.getMessage)
@@ -513,9 +557,9 @@ class StoreStreamingSpec extends SparkSpec {
       .toSeq == Seq("bucket=2023-11-14"))
     // forward-only migration: hour width on a fresh day is legal, and the
     // same-day original width still appends (replays keep working)
-    MessageStore.appendPerStream(streamDataOf(msg("s", 0, base + dayMs, 1)), path,
+    MessageStore.append(streamDataOf(msg("s", 0, base + dayMs, 1)), path,
       Map("s" -> MessageStore.HourBucket))
-    MessageStore.appendPerStream(streamDataOf(msg("s", 0, base, 0)), path, Map.empty)
+    MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path, Map.empty)
     assert(new java.io.File(s"$path/stream_id=s/stream_partition=0").list().sorted
       .toSeq == Seq("bucket=2023-11-14", "bucket=2023-11-15-22"))
     // and the day bucket's replay collapsed on read as before
@@ -528,11 +572,11 @@ class StoreStreamingSpec extends SparkSpec {
     val cache = new MessageStore.BucketWidthCache
     // warmup: first append lists (fresh store — nothing there) and records
     // the written day's width into the cache
-    MessageStore.appendPerStream(streamDataOf(msg("s", 0, base, 0)), path,
+    MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path,
       Map.empty, widthCache = Some(cache))
     // width flip on the occupied day still rejected, now from the cache
     val e = intercept[IllegalStateException] {
-      MessageStore.appendPerStream(streamDataOf(msg("s", 0, base, 1)), path,
+      MessageStore.append(streamDataOf(msg("s", 0, base, 1)), path,
         Map("s" -> MessageStore.HourBucket), widthCache = Some(cache))
     }
     assert(e.getMessage.contains("cached listing"),
@@ -546,20 +590,20 @@ class StoreStreamingSpec extends SparkSpec {
       d.listFiles().foreach(_.delete()); d.delete()
     }
     val e2 = intercept[IllegalStateException] {
-      MessageStore.appendPerStream(streamDataOf(msg("s", 0, base, 1)), path,
+      MessageStore.append(streamDataOf(msg("s", 0, base, 1)), path,
         Map("s" -> MessageStore.HourBucket), widthCache = Some(cache))
     }
     assert(e2.getMessage.contains("cached listing"), e2.getMessage)
     // retention contract: invalidate the stream → the guard re-lists, sees
     // the empty directory, and the flip becomes legal
     cache.invalidate("s")
-    MessageStore.appendPerStream(streamDataOf(msg("s", 0, base, 1)), path,
+    MessageStore.append(streamDataOf(msg("s", 0, base, 1)), path,
       Map("s" -> MessageStore.HourBucket), widthCache = Some(cache))
     assert(new java.io.File(s"$path/stream_id=s/stream_partition=0").list()
       .toSeq == Seq("bucket=2023-11-14-22"))
     // and the re-learned entry keeps guarding: day width now conflicts
     val e3 = intercept[IllegalStateException] {
-      MessageStore.appendPerStream(streamDataOf(msg("s", 0, base, 2)), path,
+      MessageStore.append(streamDataOf(msg("s", 0, base, 2)), path,
         Map.empty, widthCache = Some(cache))
     }
     assert(e3.getMessage.contains("cached listing"), e3.getMessage)
@@ -571,11 +615,11 @@ class StoreStreamingSpec extends SparkSpec {
     MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path)
     val e = intercept[IllegalStateException] {
       MessageStore.append(streamDataOf(msg("s", 0, base, 1)), path,
-        MessageStore.HourBucket)
+        default = MessageStore.HourBucket)
     }
     assert(e.getMessage.contains("bucket-width conflict"), e.getMessage)
     intercept[IllegalArgumentException] {
-      MessageStore.append(streamDataOf(msg("s", 0, base, 1)), path, "yyyy-MM")
+      MessageStore.append(streamDataOf(msg("s", 0, base, 1)), path, default = "yyyy-MM")
     }
   }
 
