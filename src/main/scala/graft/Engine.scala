@@ -12,8 +12,9 @@ import graft.streaming.{DynamicAssignment, IngestPipeline}
 /** The engine facade — the reference broker's storage-node API surface
   * (SURVEY §3) over one bucketed store:
   *
-  *  - write path: `publish` (batch) / `startIngest` (streaming) run the
-  *    validate→assign→dedup→append chain (§3.3);
+  *  - write path: `publish` (batch) / `startIngest` (streaming) share one
+  *    commit function, validate→assign→dedup→append→fan-out with one
+  *    aggregate per batch (§3.3, [[IngestPipeline.commit]]);
   *  - read path: `last`/`from`/`range` serve the resend envelope in any
   *    format (§3.1-3.2), `metadata` the count/bytes/first/last endpoints
   *    (`Storage.ts:452-576`); each reads only its own stream-part's
@@ -84,18 +85,12 @@ final class GraftEngine(
     * bucket exists; a corrupt or unreadable store propagates its error. */
   def table: DataFrame = MessageStore.openMerged(spark, storePath)
 
-  /** Batch publish: one prepared micro-batch through the ingest chain,
+  /** Batch publish: one batch through the streaming ingest's own commit
+    * path ([[IngestPipeline.commit]], without the replay marker),
     * persisted and fanned out. Returns accepted-row count. */
-  def publish(messages: DataFrame, nowMs: Long = System.currentTimeMillis()): Long = {
-    val prepared = IngestPipeline.prepareBatch(messages, nowMs, assignment.get()).cache()
-    try {
-      val n = prepared.count()
-      if (n > 0) MessageStore.append(prepared, storePath, granularityFor,
-        widthCache = Some(widthCache))
-      subscriptions.dispatch(prepared, -1L)
-      n
-    } finally prepared.unpersist()
-  }
+  def publish(messages: DataFrame, nowMs: Long = System.currentTimeMillis()): Long =
+    IngestPipeline.commit(messages, -1L, storePath, assignment.get(), nowMs,
+      subscriptions.dispatch, granularityFor, Some(widthCache))().rows
 
   /** Streaming publish (the hot path). The assignment supplier is read at
     * every batch boundary, so [[updateAssignment]] reshapes a running

@@ -1769,7 +1769,8 @@ object SparkEntry {
       // (Packing.batchAndShard — both key on n_subwords' length rank;
       // the composed pair re-scanned `enc` and paid a second doc_id
       // join; PackingSpec pins value-identity to the composition, and
-      // n_subwords is non-null by construction from Bpe.encode)
+      // n_subwords is non-null by construction from Bpe.encode — the
+      // fusion raises on a null or negative count)
       val dec = graft.operators.Packing.batchAndShard(enc,
         buckets = PaddingPlanBuckets, budget = PaddingPlanBudget,
         shards = CorpusShards, tokens = col("n_subwords"))

@@ -328,11 +328,12 @@ object Packing {
     * doc_id joins (the caller attaches the ONE decision table to its
     * payload rows).
     *
-    * Null/negative token counts: this operator normalizes them to 0
-    * (paddingApply's [[normLen]] contract); shardBalance standalone
-    * DROPS null-token docs at its histogram join, so the composition and
-    * the fusion differ there — callers with nullable token counts must
-    * keep the composed form. */
+    * Null/negative token counts fail the query (`raise_error` in the
+    * scan's projection — no extra job): paddingApply normalizes them to 0
+    * ([[normLen]]) while shardBalance standalone DROPS null-token docs at
+    * its histogram join, so the fusion has no answer that matches the
+    * composition there — callers with such token counts must keep the
+    * composed form. */
   def batchAndShard(docs: DataFrame, buckets: Int, budget: Long,
       shards: Int, tokens: Column, subStride: Long = 4096L): DataFrame = {
     require(buckets > 0, s"buckets must be positive: $buckets")
@@ -341,7 +342,9 @@ object Packing {
     require(subStride > 0, s"subStride must be positive: $subStride")
     val s = shards.toLong
     val sized = docs.select(col("doc_id").cast("long").as("doc_id"),
-      normLen(tokens).as("len"))
+      when(tokens.isNull || tokens < 0, raise_error(lit(
+        "batchAndShard: null or negative token count (use paddingApply ⨝ shardBalance)")))
+        .otherwise(tokens.cast("long")).as("len"))
       .withColumn("sub",
         expr(s"(doc_id - pmod(doc_id, ${subStride}L)) div ${subStride}L"))
     val h2 = sized.groupBy(col("len"), col("sub")).agg(count(lit(1)).as("cnt2"))

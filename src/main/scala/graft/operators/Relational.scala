@@ -529,7 +529,7 @@ object Relational {
     // then suffix-sum over the steps-sized table — both windows here run
     // over at most |steps| rows, never over users
     import org.apache.spark.sql.expressions.Window
-    broadcast(spine)
+    spine
       .join(byLvl.withColumnRenamed("lvl", "step"), Seq("step"), "left")
       .withColumn("users", sum(coalesce(col("n"), lit(0L))).over(
         Window.orderBy(col("step").desc)

@@ -100,18 +100,15 @@ object MessageStore {
       synchronized(known.getOrElse((stream, day), Set.empty))
     private[store] def isListed(stream: String): Boolean =
       synchronized(listed.contains(stream))
-    private[store] def putListing(stream: String,
+    // day → widths from a stream's directory listing or a landed append;
+    // either way the stream counts as listed from then on
+    private[store] def record(stream: String,
         widths: Map[String, Set[String]]): Unit = synchronized {
       widths.foreach { case (d, ws) =>
         known((stream, d)) = known.getOrElse((stream, d), Set.empty) ++ ws
       }
       listed += stream
     }
-    private[store] def record(stream: String, day: String, width: String): Unit =
-      synchronized {
-        known((stream, day)) = known.getOrElse((stream, day), Set.empty) + width
-        listed += stream
-      }
     /** Forget one stream (call after retention dropped its buckets). */
     def invalidate(stream: String): Unit = synchronized {
       listed -= stream
@@ -121,11 +118,22 @@ object MessageStore {
     def clear(): Unit = synchronized { known.clear(); listed.clear() }
   }
 
+  /** What one [[append]] wrote: the batch's row count and its ts span in
+    * UTC epoch-ms (None for an empty batch, which writes nothing). */
+  final case class Appended(rows: Long, tsSpanMs: Option[(Long, Long)])
+
   /** Append a message batch into the partitioned layout, bucketed per
     * stream (see [[bucketOfPerStream]]): streams in `granularityFor` get
     * their own width, all others `default`. Pass a [[BucketWidthCache]]
     * from a long-lived ingest query so the width guard stops re-listing
     * bucket directories on every micro-batch.
+    *
+    * The batch pays ONE aggregate before the write: per (stream, UTC day)
+    * row count and ts span, collected (streams × days — micro-batch
+    * bounded). The width guard reads its keys from it and the caller gets
+    * the batch statistics back as [[Appended]] — cache `messages` when it
+    * is expensive to recompute, since the aggregate and the write each
+    * scan it.
     *
     * The repartition on the partition columns is load-bearing at scale:
     * without it every write task emits a file into every bucket directory
@@ -134,15 +142,29 @@ object MessageStore {
   def append(messages: DataFrame, path: String,
       granularityFor: Map[String, String] = Map.empty,
       default: String = DayBucket,
-      widthCache: Option[BucketWidthCache] = None): Unit = {
-    // built first: an unsupported width is rejected before the guard runs
+      widthCache: Option[BucketWidthCache] = None): Appended = {
+    // built first: an unsupported width is rejected before the aggregate
     val bucket = bucketOfPerStream(col("ts"), col("stream_id"), granularityFor, default)
-    val touched =
-      requireConsistentWidths(messages, path, granularityFor, default, widthCache)
+    val perDay = messages
+      .groupBy(col("stream_id"), date_format(col("ts"), DayBucket).as("day"))
+      .agg(count(lit(1)), min(col("ts")), max(col("ts")))
+      .collect()
+    if (perDay.isEmpty) return Appended(0L, None)
+    val touched = perDay.map(r => (r.getString(0), r.getString(1)))
+    requireConsistentWidths(messages.sparkSession, touched, path, granularityFor,
+      default, widthCache)
     appendWith(messages, path, bucket)
     widthCache.foreach(c => touched.foreach { case (s, d) =>
-      c.record(s, d, granularityFor.getOrElse(s, default))
+      c.record(s, Map(d -> Set(granularityFor.getOrElse(s, default))))
     })
+    // ts is TIMESTAMP_NTZ holding UTC wall-clock: convert driver-side with
+    // an explicit UTC interpretation, independent of the session zone; a
+    // group of null ts (validation does not reject them) adds no span
+    val ts = perDay.flatMap(r => Seq(r.get(3), r.get(4))).collect {
+      case t: java.time.LocalDateTime => t.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
+    }
+    Appended(perDay.map(_.getLong(2)).sum,
+      if (ts.isEmpty) None else Some((ts.min, ts.max)))
   }
 
   /** Replay dedup is bucket-local — every read's merge window is keyed on
@@ -154,30 +176,17 @@ object MessageStore {
     * lifetime; an append whose rows would put the other width onto a day
     * that already has data is rejected before any file lands. Forward-only
     * migration stays legal (flip a stream's width starting from a day with
-    * no data yet). Cost per micro-batch: one distinct aggregate over the
-    * batch (streams × days — micro-batch-bounded) plus a bucket listing of
-    * just the affected stream directories, the same metadata sweep a read
-    * performs — and with a [[BucketWidthCache]] the listing happens once
-    * per stream per query lifetime instead of per batch.
-    * Returns the batch's touched (stream, day) pairs so the caller can
-    * record them into the cache after the append lands. */
-  private def requireConsistentWidths(messages: DataFrame, path: String,
+    * no data yet). Cost per micro-batch: a bucket listing of just the
+    * `touched` (stream, day) pairs' stream directories — the same metadata
+    * sweep a read performs — and with a [[BucketWidthCache]] the listing
+    * happens once per stream per query lifetime instead of per batch. */
+  private def requireConsistentWidths(spark: SparkSession,
+      touched: Array[(String, String)], path: String,
       granularityFor: Map[String, String], default: String,
-      cache: Option[BucketWidthCache] = None): Array[(String, String)] = {
+      cache: Option[BucketWidthCache]): Unit = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    val spark = messages.sparkSession
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootExists = fs.exists(root)
-    // fresh store with no cache to feed: nothing to conflict with, and the
-    // early return keeps this entry point zero-job (with a cache, the
-    // touched aggregate still runs once so the batch's days get recorded)
-    if (!rootExists && cache.isEmpty) return Array.empty
-    val touched = messages
-      .select(col("stream_id"), date_format(col("ts"), DayBucket).as("day"))
-      .distinct().collect()
-      .map(r => (r.getString(0), r.getString(1)))
-    def nameWidth(b: String): String = if (b.length == 10) DayBucket else HourBucket
     val conflicts = touched.groupBy(_._1).flatMap { case (stream, days) =>
       val width = granularityFor.getOrElse(stream, default)
       cache match {
@@ -190,28 +199,26 @@ object MessageStore {
                 s"'$w' (cached listing)")
           }
         case _ =>
-          if (!rootExists) Nil
-          else {
-            val streamDir = new Path(root, s"stream_id=${escapePathName(stream)}")
-            if (!fs.exists(streamDir)) {
-              cache.foreach(_.putListing(stream, Map.empty))
-              Nil
-            } else {
-              // bucket name widths present per day, across all partitions of
-              // the stream: day names are 10 chars, hour names 13
-              val existing = fs.listStatus(streamDir).toSeq.filter(_.isDirectory)
-                .flatMap(part => listBuckets(fs, part.getPath)).map(_.name)
-              // the one listing feeds the cache with EVERY day's widths, so
-              // later batches touching other days of this stream stay warm
-              cache.foreach(_.putListing(stream,
-                existing.groupBy(_.take(10))
-                  .map { case (d, bs) => d -> bs.map(nameWidth).toSet }))
-              val daySet = days.map(_._2).toSet
-              existing.filter(b => daySet.contains(b.take(10)) &&
-                  (b.length == 10) != (width == DayBucket))
-                .map(b => s"$stream day ${b.take(10)} already holds " +
-                  s"bucket '$b' of the other width")
-            }
+          val streamDir = new Path(root, s"stream_id=${escapePathName(stream)}")
+          if (!fs.exists(streamDir)) {
+            cache.foreach(_.record(stream, Map.empty))
+            Nil
+          } else {
+            // bucket name widths present per day, across all partitions of
+            // the stream: day names are 10 chars, hour names 13
+            val existing = fs.listStatus(streamDir).toSeq.filter(_.isDirectory)
+              .flatMap(part => listBuckets(fs, part.getPath)).map(_.name)
+            // the one listing feeds the cache with EVERY day's widths, so
+            // later batches touching other days of this stream stay warm
+            cache.foreach(_.record(stream,
+              existing.groupBy(_.take(10)).map { case (d, bs) =>
+                d -> bs.map(b => if (b.length == 10) DayBucket else HourBucket).toSet
+              }))
+            val daySet = days.map(_._2).toSet
+            existing.filter(b => daySet.contains(b.take(10)) &&
+                (b.length == 10) != (width == DayBucket))
+              .map(b => s"$stream day ${b.take(10)} already holds " +
+                s"bucket '$b' of the other width")
           }
       }
     }
@@ -222,7 +229,6 @@ object MessageStore {
           "replayed key a permanent duplicate. Re-append with the day's " +
           "original granularity (width flips apply to NEW days only). " +
           conflicts.mkString("; "))
-    touched
   }
 
   private def appendWith(messages: DataFrame, path: String, bucket: Column): Unit =
@@ -244,9 +250,12 @@ object MessageStore {
       .mode("append")
       .parquet(path)
 
-  /** Open the store (partition columns recovered from directory names). */
+  /** Open the store as physically written (replays included; see
+    * [[openMerged]] for the upsert view), with the explicit store schema
+    * plus `bucket` — partition columns come from directory names, never
+    * type-guessed. */
   def open(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    reader(spark, path).parquet(path)
 
   /** Open the store with upsert semantics — the read-side half of the
     * reference's Cassandra primary-key upsert: the store is append-only,
@@ -426,15 +435,6 @@ object MessageStore {
     java.time.LocalDateTime
       .ofInstant(java.time.Instant.ofEpochMilli(ms), java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter.ofPattern(granularity))
-
-  /** The `bucket` index/statistics view (records + bytes per bucket),
-    * computed from the store — SURVEY §2.4 A1-A3. */
-  def bucketStats(store: DataFrame): DataFrame =
-    store.groupBy(col("stream_id"), col("stream_partition"), col("bucket"))
-      .agg(
-        count(lit(1)).as("records"),
-        sum(octet_length(col("payload"))).as("size"),
-        max(col("ts")).as("max_ts"))
 
   /** Bounded last-N over the physical layout — the reference's iterative
     * bucket expansion (`Storage.ts:142-181`): per-bucket row counts decide
@@ -762,20 +762,18 @@ object MessageStore {
     // partition directory names are escaped by the writer (e.g. '/' in a
     // stream id becomes %2F) — escape identically or deletes silently miss
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    val store = open(spark, path)
-    val stats = bucketStats(store)
-      .select(col("stream_id"), col("stream_partition"), col("bucket"), col("max_ts"))
+    val stats = open(spark, path)
+      .groupBy(col("stream_id"), col("stream_partition"), col("bucket"))
+      .agg(max(col("ts")).as("max_ts"))
       .collect()
     val expired = stats.filter { r =>
       val cutoffMs = cutoffFor(r.getAs[String]("stream_id")).tsMs
       r.getAs[java.time.LocalDateTime]("max_ts")
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli < cutoffMs
     }.map { r =>
-      // bucket comes back as DATE when partition type inference recognizes
-      // the day format — its toString round-trips the directory value
       s"$path/stream_id=${escapePathName(r.getAs[String]("stream_id"))}" +
         s"/stream_partition=${r.getAs[Int]("stream_partition")}" +
-        s"/bucket=${escapePathName(String.valueOf(r.getAs[Any]("bucket")))}"
+        s"/bucket=${escapePathName(r.getAs[String]("bucket"))}"
     }.toSeq
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     expired.filter(p => fs.delete(new Path(p), true))

@@ -9,9 +9,10 @@ import graft.streaming.StreamVocabGrowth.TokenEvent
 
 /** Monitor taps on the live ingest stream: the SAME validate → assign
   * chain the persist path runs per micro-batch
-  * ([[IngestPipeline.prepareBatch]]), re-expressed as a pure streaming
-  * transform feeding [[StreamDrift]] (payload-size distribution per
-  * part) and [[StreamVocabGrowth]] (payload token novelty per part).
+  * ([[IngestPipeline.prepareBatch]] is [[prepared]] plus dedup), as a
+  * pure streaming transform feeding [[StreamDrift]] (payload-size
+  * distribution per part) and [[StreamVocabGrowth]] (payload token
+  * novelty per part).
   * The monitors run as their OWN streaming queries over the shared
   * source — the standard multi-sink topology: flatMapGroupsWithState
   * cannot ride inside the persist path's foreachBatch, and a monitor
@@ -27,10 +28,11 @@ import graft.streaming.StreamVocabGrowth.TokenEvent
   */
 object IngestMonitors {
 
-  /** Validation + assignment as a streaming transform (F7, F8, F6,
-    * optionally the signature seam). `now` is the ingest clock column —
-    * tests pin a literal, production passes `current_timestamp()`
-    * (evaluated per micro-batch). */
+  /** Validation + assignment (F7, F8, F6, optionally the signature
+    * seam) — the one copy of that chain, for the monitor taps and the
+    * persist path's [[IngestPipeline.prepareBatch]]. `now` is the ingest
+    * clock column: the persist path pins the batch's literal, a monitor
+    * passes `current_timestamp()` (evaluated per micro-batch). */
   def prepared(source: DataFrame, now: Column,
       assigned: Option[Set[String]] = None,
       signatureValid: Option[Column] = None): DataFrame = {
@@ -44,7 +46,7 @@ object IngestMonitors {
   /** Part key: `stream_id::partition` — the store's uniqueness scope
     * and therefore the monitors' state key. */
   private def partCol: Column =
-    concat_ws("::", col("stream_id"), col("stream_partition"))
+    graft.functions.Scalars.streamPartKey(col("stream_id"), col("stream_partition"))
 
   private def minuteCol: Column =
     expr("unix_millis(cast(ts as timestamp)) div 60000")

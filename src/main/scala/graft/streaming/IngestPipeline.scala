@@ -1,11 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Dedup
-import graft.ingest.Validate
 import graft.store.MessageStore
 
 /** The hot-path ingest pipeline (SURVEY §3.3): validated, partitioned,
@@ -16,6 +15,10 @@ import graft.store.MessageStore
   * assignment filter (`Storage.ts:65-69`), bucket routing
   * (`BucketManager.ts:72-97`) — with the reference's ~550 LoC of
   * batch/bucket FSMs collapsed into the micro-batch engine (S3-S5).
+  * Every stored row, batch publish or streaming, takes the same [[commit]]
+  * path, and each committed batch pays one aggregate over its prepared
+  * rows (inside [[MessageStore.append]]), which feeds both the width
+  * guard and the commit marker.
   *
   * Design notes for scale:
   *  - NO watermark on the persist path: the reference accepts arbitrarily
@@ -34,33 +37,52 @@ import graft.store.MessageStore
   */
 object IngestPipeline {
 
-  /** One micro-batch through the validation/partition/dedup chain.
-    * `assigned` is the optional set of "stream_id::partition" keys this
-    * node stores (None ⇒ store everything). */
+  /** One micro-batch through the validation/partition/dedup chain:
+    * [[IngestMonitors.prepared]] (validate → assign) plus intra-batch
+    * dedup. `assigned` is the optional set of "stream_id::partition" keys
+    * this node stores (None ⇒ store everything). */
   def prepareBatch(
       batch: DataFrame,
       nowMs: Long,
-      assigned: Option[Set[String]] = None): DataFrame = {
+      assigned: Option[Set[String]] = None): DataFrame =
     // NTZ literal built directly from the UTC instant — session-timezone
     // independent (a Timestamp lit + cast would shift by the session zone)
-    val now = lit(java.time.LocalDateTime.ofInstant(
-      java.time.Instant.ofEpochMilli(nowMs), java.time.ZoneOffset.UTC))
-    val validated = Validate.accepted(batch, now)
-    val scoped = assigned match {
-      case Some(keys) =>
-        // F6 — storage-assignment filter against a broadcast-able set
-        // (StorageConfig.hasStream, `src/storage/StorageConfig.ts:83-86`)
-        validated.filter(
-          concat_ws("::", col("stream_id"), col("stream_partition"))
-            .isInCollection(keys))
-      case None => validated
-    }
-    Dedup.ingestDedup(scoped)
+    Dedup.ingestDedup(IngestMonitors.prepared(batch,
+      lit(java.time.LocalDateTime.ofInstant(
+        java.time.Instant.ofEpochMilli(nowMs), java.time.ZoneOffset.UTC)),
+      assigned))
+
+  /** The one commit path for every write — [[graft.GraftEngine.publish]]
+    * and each streaming micro-batch ([[processBatch]]): prepare →
+    * [[MessageStore.append]] (one aggregate over the prepared rows, then
+    * the write) → `mark` → fan-out. `mark` sees what the append wrote and
+    * runs before any subscriber does; the prepared batch is cached across
+    * the aggregate, the write and the fan-out. */
+  def commit(
+      batch: DataFrame,
+      batchId: Long,
+      storePath: String,
+      assigned: Option[Set[String]],
+      nowMs: Long,
+      onBatch: (DataFrame, Long) => Unit,
+      granularityFor: Map[String, String],
+      widthCache: Option[MessageStore.BucketWidthCache])(
+      mark: MessageStore.Appended => Unit = _ => ()): MessageStore.Appended = {
+    val prepared = prepareBatch(batch, nowMs, assigned).cache()
+    try {
+      val appended = MessageStore.append(prepared, storePath, granularityFor,
+        widthCache = widthCache)
+      mark(appended)
+      onBatch(prepared, batchId)
+      appended
+    } finally prepared.unpersist()
   }
 
-  /** One micro-batch commit: prepare → append → mark. The per-batch marker
-    * makes replays (foreachBatch is at-least-once) idempotent — a
-    * re-delivered batchId whose marker exists is skipped entirely.
+  /** One micro-batch commit ([[commit]]) guarded by a per-batch marker,
+    * which makes replays (foreachBatch is at-least-once) idempotent — a
+    * re-delivered batchId whose marker exists is skipped entirely. The
+    * marker lands after the append and before `onBatch`, so a batch that
+    * fails (e.g. the width guard) leaves none and its replay retries it.
     * Returns true when the batch was (newly) applied. */
   def processBatch(
       batch: DataFrame,
@@ -81,24 +103,13 @@ object IngestPipeline {
       // R7: the assignment supplier is re-evaluated at each batch boundary
       // (DynamicAssignment.get) — assignment changes apply to the next
       // micro-batch without restarting the query (StorageConfig.ts:96-149)
-      val prepared = prepareBatch(batch, nowMs, assigned()).cache()
-      try {
-        MessageStore.append(prepared, storePath, granularityFor,
-          widthCache = widthCache)
+      commit(batch, batchId, storePath, assigned(), nowMs, onBatch,
+          granularityFor, widthCache) { appended =>
         // the marker doubles as the batch-statistics record (A10): rows,
-        // commit time, and the batch's ts span — IngestStats aggregates
-        // these into the BatchManager-style observability surface
-        // ts is TIMESTAMP_NTZ: aggregate it as-is and convert to epoch-ms
-        // driver-side with an explicit UTC interpretation — unix_millis on
-        // a cast would shift with spark.sql.session.timeZone, diverging
-        // from Engine.metadata's UTC-pinned conversion of the same data
-        val stats = prepared.agg(
-          count(lit(1)), min(col("ts")), max(col("ts"))).collect().head
-        def epochMs(i: Int): Long =
-          if (stats.isNullAt(i)) nowMs
-          else stats.getAs[java.time.LocalDateTime](i)
-            .toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-        val (rows, minTs, maxTs) = (stats.getLong(0), epochMs(1), epochMs(2))
+        // commit time, and the batch's ts span (the commit time for an
+        // empty batch) — IngestStats aggregates these into the
+        // BatchManager-style observability surface
+        val (minTs, maxTs) = appended.tsSpanMs.getOrElse((nowMs, nowMs))
         // write-then-rename: a crash mid-write must never leave a
         // truncated marker for batchLog to parse into an all-null row
         // (the same commit-point discipline as the store's bucket swap)
@@ -106,14 +117,13 @@ object IngestPipeline {
           marker.getParent, "." + marker.getName + ".tmp")
         val out = fs.create(tmp, true)
         out.write(
-          s"""{"batch_id":$batchId,"rows":$rows,"committed_ms":$nowMs,"min_ts_ms":$minTs,"max_ts_ms":$maxTs}"""
+          s"""{"batch_id":$batchId,"rows":${appended.rows},"committed_ms":$nowMs,"min_ts_ms":$minTs,"max_ts_ms":$maxTs}"""
             .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         out.close()
         fs.delete(marker, false)
         fs.rename(tmp, marker)
-        onBatch(prepared, batchId)
-        true
-      } finally prepared.unpersist()
+      }
+      true
     }
   }
 

@@ -113,6 +113,43 @@ class EngineSpec extends SparkSpec {
     assert(left == Set(("long", 0))) // only long's recent bucket survives
   }
 
+  test("retention drops the expired bucket when every stream id looks numeric") {
+    val dayMs = 86400000L
+    // "123" and "1e5" would come back as INT / DECIMAL under partition type
+    // inference; the store's own schema keeps them strings
+    for (id <- Seq("123", "1e5")) {
+      val path = Files.createTempDirectory("graft-numeric-id").toString
+      val engine = new GraftEngine(spark, path)
+      assert(engine.publish(streamDataOf(
+        msg(id, 0, dayMs, 0), msg(id, 0, 5 * dayMs, 1)), 10 * dayMs) == 2)
+      assert(engine.deleteExpired(retentionDays = 7, nowMs = 10 * dayMs) ==
+        Seq(s"$path/stream_id=$id/stream_partition=0/bucket=1970-01-02"))
+      assert(engine.metadata(id, 0).map(_._1) == Some(1L))
+    }
+  }
+
+  test("publish and streaming ingest share one commit: same rows, count and stats") {
+    val dayMs = 86400000L
+    val now = 10 * dayMs
+    // two streams over two days, one intra-batch duplicate, one rejected
+    val batch = streamDataOf(
+      msg("a", 0, dayMs + 5000L, 0), msg("a", 0, 2 * dayMs + 1000L, 1),
+      msg("b", 1, dayMs + 1000L, 0), msg("b", 1, 2 * dayMs + 7000L, 1),
+      msg("b", 1, 2 * dayMs + 7000L, 1), msg("b", 1, now + 600000L, 2))
+    val engine = new GraftEngine(spark,
+      Files.createTempDirectory("graft-commit-pub").toString)
+    assert(engine.publish(batch, now) == 4L)
+    val ingested = Files.createTempDirectory("graft-commit-ingest").toString
+    val ckpt = Files.createTempDirectory("graft-commit-ckpt").toString
+    assert(graft.streaming.IngestPipeline.processBatch(batch, 0L, ingested, ckpt,
+      nowMs = now))
+    val stats = graft.streaming.IngestStats.batchLog(spark, ckpt).collect().head
+    assert((stats.getAs[Long]("rows"), stats.getAs[Long]("min_ts_ms"),
+      stats.getAs[Long]("max_ts_ms")) == ((4L, dayMs + 1000L, 2 * dayMs + 7000L)))
+    assert(keysOf(engine.table).sorted ==
+      keysOf(graft.store.MessageStore.openMerged(spark, ingested)).sorted)
+  }
+
   test("ttlSweep expires by age with the reference's 3-day default") {
     val engine = new GraftEngine(spark,
       Files.createTempDirectory("graft-ttlsweep").toString)

@@ -285,4 +285,21 @@ class PackingSpec extends SparkSpec {
         s"fusion drifted at shards=$shards buckets=$buckets")
     }
   }
+
+  test("batchAndShard fails the query on a null or negative token count") {
+    val s = spark
+    import s.implicits._
+    def docs(n: Option[Int]) = Seq((1L, Option(3)), (2L, n)).toDF("doc_id", "n")
+    def fused(n: Option[Int]) = Packing.batchAndShard(docs(n),
+      buckets = 2, budget = 9L, shards = 2, tokens = col("n"))
+    // the fusion has no answer equal to paddingApply ⨝ shardBalance for
+    // these (one normalizes to 0, the other drops null), so it refuses
+    for (bad <- Seq(None, Some(-1))) {
+      val e = intercept[Exception](fused(bad).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      assert(msgs.exists(_.contains("null or negative token count")), e.toString)
+    }
+    assert(fused(Some(0)).count() == 2L)
+  }
 }

@@ -637,6 +637,36 @@ class StoreStreamingSpec extends SparkSpec {
     assert(graft.streaming.IngestPipeline.processBatch(
       streamDataOf(msg("s", 0, 3000L, 2)), 8L, path, ckpt, nowMs = 10000L))
     assert(MessageStore.open(spark, path).count() == 3)
+    // a batch the width guard rejects throws before any data file or
+    // marker lands, so its replay (same batch id) is retried, not skipped
+    def dataFiles = Files.walk(java.nio.file.Paths.get(path)).toArray
+      .count(_.toString.endsWith(".parquet"))
+    val filesBefore = dataFiles
+    val late = streamDataOf(msg("s", 0, 4000L, 3))
+    intercept[IllegalStateException] {
+      graft.streaming.IngestPipeline.processBatch(late, 9L, path, ckpt,
+        nowMs = 10000L, granularityFor = Map("s" -> MessageStore.HourBucket))
+    }
+    assert(!new java.io.File(s"$ckpt/graft-committed/9").exists())
+    assert(dataFiles == filesBefore)
+    assert(graft.streaming.IngestPipeline.processBatch(
+      late, 9L, path, ckpt, nowMs = 10000L))
+    assert(MessageStore.open(spark, path).count() == 4)
+  }
+
+  test("processBatch: an all-rejected batch commits a rows=0 marker at nowMs " +
+      "and writes nothing to the store") {
+    val path = tmpDir("graft-marker")
+    val ckpt = tmpDir("graft-marker-ckpt")
+    val dayMs = 86400000L
+    val nowMs = 10 * dayMs
+    // every row rejected: a future ts and a malformed payload
+    assert(IngestPipeline.processBatch(streamDataOf(
+      msg("s", 0, nowMs + 600000L, 0), msg("s", 0, dayMs, 1, payload = "not json")),
+      0L, path, ckpt, nowMs = nowMs))
+    assert(Files.readString(java.nio.file.Paths.get(s"$ckpt/graft-committed/0")) == s"""{"batch_id":0,"rows":0,"committed_ms":$nowMs,""" +
+      s""""min_ts_ms":$nowMs,"max_ts_ms":$nowMs}""")
+    assert(new java.io.File(path).list().isEmpty)
   }
 
   test("compactStreamPart merges per-batch small files, preserving rows") {
