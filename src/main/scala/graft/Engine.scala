@@ -13,8 +13,9 @@ import graft.streaming.{DynamicAssignment, IngestPipeline}
   * (SURVEY §3) over one bucketed store:
   *
   *  - write path: `publish` (batch) / `startIngest` (streaming) share one
-  *    commit function, validate→assign→dedup→append→fan-out with one
-  *    aggregate per batch (§3.3, [[IngestPipeline.commit]]);
+  *    commit function, validate→assign→layout→dedup→aggregate→fan-out→
+  *    append with one exchange and one aggregate per batch, live delivery
+  *    before the store write (§3.3, [[IngestPipeline.commit]]);
   *  - read path: `last`/`from`/`range` serve the resend envelope in any
   *    format (§3.1-3.2), `metadata` the count/bytes/first/last endpoints
   *    (`Storage.ts:452-576`); each reads only its own stream-part's
@@ -86,8 +87,8 @@ final class GraftEngine(
   def table: DataFrame = MessageStore.openMerged(spark, storePath)
 
   /** Batch publish: one batch through the streaming ingest's own commit
-    * path ([[IngestPipeline.commit]], without the replay marker),
-    * persisted and fanned out. Returns accepted-row count. */
+    * path ([[IngestPipeline.commit]], without the replay marker), fanned
+    * out and persisted. Returns accepted-row count. */
   def publish(messages: DataFrame, nowMs: Long = System.currentTimeMillis()): Long =
     IngestPipeline.commit(messages, -1L, storePath, assignment.get(), nowMs,
       subscriptions.dispatch, granularityFor, Some(widthCache))().rows

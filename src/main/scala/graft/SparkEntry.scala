@@ -4350,6 +4350,8 @@ object SparkEntry {
          |  '",' || ${quotedOrNull("new_group_key")} ||
          |  ',' || signature_type ||
          |  ',' || $signatureJson || ']' AS msg""".stripMargin
+    // the ingest gate's first verdict: a null in any required field
+    val nullField = Validate.requiredFields.map(f => s"$f IS NULL").mkString(" OR ")
     val minuteCte =
       s"""mc AS (
          |  SELECT stream_id, stream_partition, date_trunc('minute', ts) AS minute,
@@ -4589,7 +4591,8 @@ object SparkEntry {
       "q_ingest_validate" ->
         s"""$sd
            |SELECT stream_id,
-           |       CASE WHEN ts > TIMESTAMP '2024-01-20 00:05:00' THEN 'rejected_future'
+           |       CASE WHEN $nullField THEN 'rejected_null'
+           |            WHEN ts > TIMESTAMP '2024-01-20 00:05:00' THEN 'rejected_future'
            |            WHEN encryption_type = 0 AND (NOT json_valid(payload) OR trim(payload) = 'null') THEN 'rejected_json'
            |            ELSE 'accepted' END AS verdict,
            |       count(*) AS n
@@ -4600,7 +4603,8 @@ object SparkEntry {
       "q_ingest_signature" ->
         s"""$sd
            |SELECT stream_id,
-           |       CASE WHEN ts > TIMESTAMP '2024-01-20 00:05:00' THEN 'rejected_future'
+           |       CASE WHEN $nullField THEN 'rejected_null'
+           |            WHEN ts > TIMESTAMP '2024-01-20 00:05:00' THEN 'rejected_future'
            |            WHEN encryption_type = 0 AND (NOT json_valid(payload) OR trim(payload) = 'null') THEN 'rejected_json'
            |            WHEN (CASE WHEN sequence_no = 7 THEN '0xtampered' ELSE signature END)
            |                 <> '0x' || md5(stream_id || ':' ||

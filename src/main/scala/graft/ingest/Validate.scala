@@ -48,10 +48,19 @@ object Validate {
         col("publisher_id")))),
       lit(false))
 
+  /** The fields every message must carry: those `StreamMessage.schema`
+    * declares non-nullable. */
+  val requiredFields: Seq[String] =
+    graft.model.StreamMessage.schema.filterNot(_.nullable).map(_.name)
+
   /** Annotate a message batch with its validation verdict:
-    * `accepted` | `rejected_future` | `rejected_json` |
-    * `rejected_signature` (first failure wins, future checked first like
-    * the reference's ordering). The JSON check applies only to plaintext
+    * `accepted` | `rejected_null` | `rejected_future` | `rejected_json` |
+    * `rejected_signature` (first failure wins). A null in any
+    * [[requiredFields]] column is checked first — the reference rejects a
+    * message without a timestamp, and a null would otherwise fall through
+    * every later check (a null comparison is null, not false) into the
+    * store, where a null ts has no bucket. Future is checked next, like the
+    * reference's ordering. The JSON check applies only to plaintext
     * content — encrypted payloads are opaque ciphertext strings the
     * reference stores without parsing (`Publisher.ts:46` parses via
     * getContent(true) only for unencrypted messages; ciphertext
@@ -63,7 +72,10 @@ object Validate {
     val plaintext =
       if (df.columns.contains("encryption_type")) col("encryption_type") === 0
       else lit(true)
-    val base = when(isFuture(col("ts"), now), lit("rejected_future"))
+    val missing = requiredFields.filter(df.columns.contains)
+      .map(col(_).isNull).reduceOption(_ || _).getOrElse(lit(false))
+    val base = when(missing, lit("rejected_null"))
+      .when(isFuture(col("ts"), now), lit("rejected_future"))
       .when(plaintext && !isValidJson(col("payload")), lit("rejected_json"))
     val withSig = signatureValid.fold(base)(v =>
       base.when(!v, lit("rejected_signature")))

@@ -64,22 +64,23 @@ object Resend {
 }
 
 /** Live-subscription registry (R1): bounded queues per (subscriber,
-  * stream-part), routed by stream-part key — one subscriber may hold many
+  * stream-part), indexed by stream-part — one subscriber may hold many
   * concurrent subscriptions, like one reference connection subscribing to
   * many stream-parts (`WebsocketServer.ts:327-345`). Plugs into
-  * `IngestPipeline.start(onBatch = registry.dispatch)`; `resendThenLive`
-  * serves the R5 contract.
+  * `IngestPipeline.start(onBatch = registry.dispatch)`, which calls it
+  * before the batch is written, so delivery is at least once (a batch
+  * replayed after a failed write or commit marker is delivered again);
+  * `resendThenLive` serves the R5 contract.
   *
   * Dispatch runs the routing/format pass distributed (filter + both wire
-  * shapes rendered in-plan), then delivers driver-side through
-  * `toLocalIterator` — one result partition in driver memory at a time,
-  * never a full `collect()`. Delivery must be driver-side because the
-  * subscription queues live in the JVM that called `subscribe` (the
-  * driver): an executor-side `foreachPartition` would resolve an empty
-  * process-local registry on any multi-executor cluster and silently drop
-  * every message. The delivered stream is small by construction — already
-  * filtered to subscribed stream-parts — so the driver hop is bounded by
-  * subscriber demand, not batch size. */
+  * shapes rendered in-plan) as ONE Spark job, then delivers driver-side.
+  * Delivery must be driver-side because the subscription queues live in
+  * the JVM that called `subscribe` (the driver): an executor-side
+  * `foreachPartition` would resolve an empty process-local registry on
+  * any multi-executor cluster and silently drop every message. The driver
+  * holds at most the subscribed slice of one micro-batch — the plan has
+  * already filtered it to subscribed stream-parts — so the driver hop is
+  * bounded by subscriber demand, not batch size. */
 final class SubscriptionRegistry(queueCapacity: Int = 10000) extends AutoCloseable {
 
   final case class Subscription(subscriberId: String, streamId: String, partition: Int,
@@ -90,9 +91,9 @@ final class SubscriptionRegistry(queueCapacity: Int = 10000) extends AutoCloseab
       s"Unknown format '$format' (supported: object, protocol, raw)")
   }
 
-  private val subs = new ConcurrentHashMap[(String, String, Int), Subscription]()
-
-  private def key(streamId: String, partition: Int) = s"$streamId::$partition"
+  /** stream-part → its subscriptions by subscriber id; a part with none
+    * has no entry. Updated atomically per part by `compute`. */
+  private val byPart = new ConcurrentHashMap[(String, Int), Map[String, Subscription]]()
 
   /** Register a subscription; `format` picks the wire shape of delivered
     * messages (`object` | `protocol` | `raw`), like the reference's
@@ -102,45 +103,46 @@ final class SubscriptionRegistry(queueCapacity: Int = 10000) extends AutoCloseab
       format: String = "object"): Subscription = {
     val s = Subscription(subscriberId, streamId, partition,
       new LinkedBlockingQueue[String](queueCapacity), format)
-    subs.put((subscriberId, streamId, partition), s)
+    byPart.compute((streamId, partition),
+      (_, subs) => Option(subs).getOrElse(Map.empty) + (subscriberId -> s))
     s
   }
 
   /** Drop one subscription of the subscriber (others stay live). */
   def unsubscribe(subscriberId: String, streamId: String, partition: Int): Unit =
-    subs.remove((subscriberId, streamId, partition))
+    byPart.computeIfPresent((streamId, partition), (_, subs) => {
+      val rest = subs - subscriberId
+      if (rest.isEmpty) null else rest
+    })
 
   /** Drop ALL the subscriber's subscriptions (connection close). */
   def unsubscribe(subscriberId: String): Unit =
-    subs.keySet().asScala.filter(_._1 == subscriberId).foreach(subs.remove)
+    byPart.keySet().asScala.foreach { case (s, p) => unsubscribe(subscriberId, s, p) }
 
   /** Offer a message to every subscription of its stream-part, each in its
     * own format; a full queue drops oldest-first, the bounded-buffer
     * behavior of the reference's backpressure close (`Connection.ts:17-18`
-    * + `RequestHandler.ts:356-363`). Called from the driver-side dispatch
-    * loop ([[dispatch]] pulls formatted rows via `toLocalIterator`). */
+    * + `RequestHandler.ts:356-363`). Called from the driver-side delivery
+    * loop of [[dispatch]]. */
   private[serve] def offer(streamId: String, partition: Int,
       objectMsg: String, protocolMsg: String): Unit =
-    subs.values().asScala.foreach { s =>
-      if (s.streamId == streamId && s.partition == partition) {
-        val msg = s.format match {
-          case "protocol" | "raw" => protocolMsg
-          case _                  => objectMsg
-        }
-        if (!s.queue.offer(msg)) { s.queue.poll(); s.queue.offer(msg) }
+    Option(byPart.get((streamId, partition))).foreach(_.values.foreach { s =>
+      val msg = s.format match {
+        case "protocol" | "raw" => protocolMsg
+        case _                  => objectMsg
       }
-    }
+      if (!s.queue.offer(msg)) { s.queue.poll(); s.queue.offer(msg) }
+    })
 
   /** Route a prepared micro-batch to matching subscriptions: one
     * distributed filter+format pass (both wire shapes rendered in-plan —
-    * two narrow string concats per row), then a driver-side pull over
-    * `toLocalIterator` into the queues. The queues only exist in this JVM,
+    * two narrow string concats per row) collected in one job, then a
+    * driver-side loop into the queues. The queues only exist in this JVM,
     * so delivery happens here; the distributed plan has already shrunk the
     * batch to subscribed stream-parts. */
   def dispatch(batch: DataFrame, batchId: Long): Unit = {
     import org.apache.spark.sql.functions.col
-    val wanted = subs.values().asScala
-      .map(s => key(s.streamId, s.partition)).toSet
+    val wanted = byPart.keySet().asScala.map { case (s, p) => s"$s::$p" }.toSet
     if (wanted.isEmpty) return
     batch
       .filter(graft.functions.Scalars
@@ -148,7 +150,7 @@ final class SubscriptionRegistry(queueCapacity: Int = 10000) extends AutoCloseab
         .isInCollection(wanted))
       .select(col("stream_id"), col("stream_partition"),
         Formats.objectJson.as("msg_object"), Formats.protocolJson.as("msg_protocol"))
-      .toLocalIterator().asScala
+      .collect()
       .foreach(r => offer(r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
   }
 
@@ -166,5 +168,5 @@ final class SubscriptionRegistry(queueCapacity: Int = 10000) extends AutoCloseab
   }
 
   /** Drop all subscriptions (engine shutdown). */
-  override def close(): Unit = subs.clear()
+  override def close(): Unit = byPart.clear()
 }

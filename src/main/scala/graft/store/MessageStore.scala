@@ -118,54 +118,103 @@ object MessageStore {
     def clear(): Unit = synchronized { known.clear(); listed.clear() }
   }
 
-  /** What one [[append]] wrote: the batch's row count and its ts span in
+  /** The store's partition columns, and the hash key of every append's
+    * layout ([[layout]]). */
+  private val PartitionCols: Seq[String] = Seq("stream_id", "stream_partition", "bucket")
+
+  /** Lay a message batch out for the store: its rows gain the `bucket`
+    * column, bucketed per stream (see [[bucketOfPerStream]]: streams in
+    * `granularityFor` get their own width, all others `default`), and are
+    * hash-partitioned on [[PartitionCols]] into `defaultParallelism`
+    * partitions — ONE exchange. Everything downstream keyed on a superset
+    * of those columns inherits the partitioning: the ingest dedup window
+    * (uniqueness key + bucket), [[write]]'s aggregate, and the write itself,
+    * which lands one file per bucket per batch because each bucket sits in
+    * exactly one partition.
+    *
+    * The source is coalesced (narrow) to the same width first: a
+    * MemoryStream batch carries one partition per `addData`, and without
+    * this the exchange's map stage runs one task per call. The explicit
+    * partition count is load-bearing at scale: the keyed exchange alone
+    * lets AQE coalesce it to a handful of tasks, and each write task then
+    * creates its partition DIRECTORIES serially (r18 event logs: the sf0.1
+    * append collapsed to 6 tasks spending 8 s wall / 3 s CPU on ~1,200
+    * dir+file creations); pinning it to defaultParallelism keeps one file
+    * per bucket while spreading the filesystem work across the cluster. */
+  def layout(messages: DataFrame,
+      granularityFor: Map[String, String] = Map.empty,
+      default: String = DayBucket): DataFrame = {
+    val width = messages.sparkSession.sparkContext.defaultParallelism
+    messages.coalesce(width)
+      .withColumn("bucket", bucketOfPerStream(col("ts"), col("stream_id"),
+        granularityFor, default))
+      .repartition(width, PartitionCols.map(col): _*)
+  }
+
+  /** What one [[write]] wrote: the batch's row count and its ts span in
     * UTC epoch-ms (None for an empty batch, which writes nothing). */
   final case class Appended(rows: Long, tsSpanMs: Option[(Long, Long)])
 
-  /** Append a message batch into the partitioned layout, bucketed per
-    * stream (see [[bucketOfPerStream]]): streams in `granularityFor` get
-    * their own width, all others `default`. Pass a [[BucketWidthCache]]
-    * from a long-lived ingest query so the width guard stops re-listing
-    * bucket directories on every micro-batch.
-    *
-    * The batch pays ONE aggregate before the write: per (stream, UTC day)
-    * row count and ts span, collected (streams × days — micro-batch
-    * bounded). The width guard reads its keys from it and the caller gets
-    * the batch statistics back as [[Appended]] — cache `messages` when it
-    * is expensive to recompute, since the aggregate and the write each
-    * scan it.
-    *
-    * The repartition on the partition columns is load-bearing at scale:
-    * without it every write task emits a file into every bucket directory
-    * (tasks × buckets small files); with it each bucket is written by
-    * exactly one task — one file per bucket per batch. */
+  /** Append a message batch: [[layout]] then [[write]]. Pass a
+    * [[BucketWidthCache]] from a long-lived writer so the width guard
+    * stops re-listing bucket directories on every batch. The laid-out
+    * batch is cached across the aggregate and the write, so its one
+    * exchange runs once. */
   def append(messages: DataFrame, path: String,
       granularityFor: Map[String, String] = Map.empty,
       default: String = DayBucket,
       widthCache: Option[BucketWidthCache] = None): Appended = {
-    // built first: an unsupported width is rejected before the aggregate
-    val bucket = bucketOfPerStream(col("ts"), col("stream_id"), granularityFor, default)
-    val perDay = messages
-      .groupBy(col("stream_id"), date_format(col("ts"), DayBucket).as("day"))
+    val laid = layout(messages, granularityFor, default).cache()
+    try write(laid, path, widthCache)()
+    finally laid.unpersist()
+  }
+
+  /** The store's one write, of a batch laid out by [[layout]] (its
+    * `bucket` column decides each row's directory). The batch pays ONE
+    * aggregate before the write: per (stream_id, stream_partition, bucket)
+    * row count and ts span, collected (stream-parts × buckets —
+    * micro-batch bounded) and planned without an exchange, since the
+    * layout already partitions on exactly that key. The width guard reads
+    * its (stream, day, width) keys from it; then `beforeWrite` runs — the
+    * commit delivers to live subscribers there, so fan-out waits for
+    * neither the parquet write nor the commit marker — and then the rows
+    * land. A rejected batch (width conflict)
+    * throws before `beforeWrite`; an empty batch skips both `beforeWrite`
+    * and the write and returns `Appended(0, None)`. */
+  def write(laid: DataFrame, path: String,
+      widthCache: Option[BucketWidthCache] = None)(
+      beforeWrite: => Unit = ()): Appended = {
+    val perBucket = laid
+      .groupBy(PartitionCols.map(col): _*)
       .agg(count(lit(1)), min(col("ts")), max(col("ts")))
       .collect()
-    if (perDay.isEmpty) return Appended(0L, None)
-    val touched = perDay.map(r => (r.getString(0), r.getString(1)))
-    requireConsistentWidths(messages.sparkSession, touched, path, granularityFor,
-      default, widthCache)
-    appendWith(messages, path, bucket)
-    widthCache.foreach(c => touched.foreach { case (s, d) =>
-      c.record(s, Map(d -> Set(granularityFor.getOrElse(s, default))))
-    })
+    if (perBucket.isEmpty) return Appended(0L, None)
+    // a null ts has no bucket and so no width to guard (the ingest gate
+    // rejects such rows; a raw append lands them in Hive's default bucket)
+    val touched = perBucket
+      .flatMap(r => Option(r.getString(2)).map(b => (r.getString(0), b))).distinct
+    requireConsistentWidths(laid.sparkSession, touched, path, widthCache)
     // ts is TIMESTAMP_NTZ holding UTC wall-clock: convert driver-side with
-    // an explicit UTC interpretation, independent of the session zone; a
-    // group of null ts (validation does not reject them) adds no span
-    val ts = perDay.flatMap(r => Seq(r.get(3), r.get(4))).collect {
+    // an explicit UTC interpretation, independent of the session zone
+    val ts = perBucket.flatMap(r => Seq(r.get(4), r.get(5))).collect {
       case t: java.time.LocalDateTime => t.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
     }
-    Appended(perDay.map(_.getLong(2)).sum,
+    val appended = Appended(perBucket.map(_.getLong(3)).sum,
       if (ts.isEmpty) None else Some((ts.min, ts.max)))
+    beforeWrite
+    laid.write
+      .partitionBy(PartitionCols: _*)
+      .mode("append")
+      .parquet(path)
+    widthCache.foreach(c => touched.foreach { case (s, b) =>
+      c.record(s, Map(b.take(10) -> Set(widthOf(b))))
+    })
+    appended
   }
+
+  /** Width of a bucket name: day names are 10 chars, hour names 13. */
+  private def widthOf(bucket: String): String =
+    if (bucket.length == 10) DayBucket else HourBucket
 
   /** Replay dedup is bucket-local — every read's merge window is keyed on
     * uniqueKey + bucket, and the clean-marker fast paths skip the window
@@ -176,24 +225,24 @@ object MessageStore {
     * lifetime; an append whose rows would put the other width onto a day
     * that already has data is rejected before any file lands. Forward-only
     * migration stays legal (flip a stream's width starting from a day with
-    * no data yet). Cost per micro-batch: a bucket listing of just the
-    * `touched` (stream, day) pairs' stream directories — the same metadata
+    * no data yet). `touched` is the batch's (stream, bucket) pairs, whose
+    * names carry their day and width. Cost per micro-batch: a bucket
+    * listing of just the touched streams' directories — the same metadata
     * sweep a read performs — and with a [[BucketWidthCache]] the listing
     * happens once per stream per query lifetime instead of per batch. */
   private def requireConsistentWidths(spark: SparkSession,
       touched: Array[(String, String)], path: String,
-      granularityFor: Map[String, String], default: String,
       cache: Option[BucketWidthCache]): Unit = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val conflicts = touched.groupBy(_._1).flatMap { case (stream, days) =>
-      val width = granularityFor.getOrElse(stream, default)
+    val conflicts = touched.groupBy(_._1).flatMap { case (stream, buckets) =>
+      val days = buckets.map { case (_, b) => (b.take(10), widthOf(b)) }.distinct.toSeq
       cache match {
         // warm path: the stream's directory widths are already in memory —
         // no filesystem access at all
         case Some(c) if c.isListed(stream) =>
-          days.map(_._2).toSeq.flatMap { d =>
+          days.flatMap { case (d, width) =>
             c.widthsOf(stream, d).filter(_ != width)
               .map(w => s"$stream day $d already holds buckets of width " +
                 s"'$w' (cached listing)")
@@ -204,21 +253,19 @@ object MessageStore {
             cache.foreach(_.record(stream, Map.empty))
             Nil
           } else {
-            // bucket name widths present per day, across all partitions of
-            // the stream: day names are 10 chars, hour names 13
+            // bucket names present, across all partitions of the stream
             val existing = fs.listStatus(streamDir).toSeq.filter(_.isDirectory)
               .flatMap(part => listBuckets(fs, part.getPath)).map(_.name)
             // the one listing feeds the cache with EVERY day's widths, so
             // later batches touching other days of this stream stay warm
             cache.foreach(_.record(stream,
               existing.groupBy(_.take(10)).map { case (d, bs) =>
-                d -> bs.map(b => if (b.length == 10) DayBucket else HourBucket).toSet
+                d -> bs.map(widthOf).toSet
               }))
-            val daySet = days.map(_._2).toSet
-            existing.filter(b => daySet.contains(b.take(10)) &&
-                (b.length == 10) != (width == DayBucket))
-              .map(b => s"$stream day ${b.take(10)} already holds " +
-                s"bucket '$b' of the other width")
+            days.flatMap { case (d, width) =>
+              existing.filter(b => b.take(10) == d && widthOf(b) != width)
+                .map(b => s"$stream day $d already holds bucket '$b' of the other width")
+            }
           }
       }
     }
@@ -230,25 +277,6 @@ object MessageStore {
           "original granularity (width flips apply to NEW days only). " +
           conflicts.mkString("; "))
   }
-
-  private def appendWith(messages: DataFrame, path: String, bucket: Column): Unit =
-    messages
-      .withColumn("bucket", bucket)
-      // explicit partition count: the keyed repartition alone lets AQE
-      // coalesce this small exchange to a handful of tasks, and each
-      // write task then creates its partition DIRECTORIES serially — r18
-      // event logs showed the sf0.1 append collapsed to 6 tasks spending
-      // 8s wall / 3s CPU on ~1,200 dir+file creations. Pinning the count
-      // to defaultParallelism keeps one file per bucket dir (the keyed
-      // hash still routes a bucket to one task) while spreading the
-      // filesystem work across the cluster width — scale-adaptive, not a
-      // local[32] constant.
-      .repartition(messages.sparkSession.sparkContext.defaultParallelism,
-        col("stream_id"), col("stream_partition"), col("bucket"))
-      .write
-      .partitionBy("stream_id", "stream_partition", "bucket")
-      .mode("append")
-      .parquet(path)
 
   /** Open the store as physically written (replays included; see
     * [[openMerged]] for the upsert view), with the explicit store schema

@@ -9,7 +9,8 @@ import graft.streaming.StreamVocabGrowth.TokenEvent
 
 /** Monitor taps on the live ingest stream: the SAME validate → assign
   * chain the persist path runs per micro-batch
-  * ([[IngestPipeline.prepareBatch]] is [[prepared]] plus dedup), as a
+  * ([[IngestPipeline.prepareBatch]] is [[prepared]] plus the store
+  * layout and dedup), as a
   * pure streaming transform feeding [[StreamDrift]] (payload-size
   * distribution per part) and [[StreamVocabGrowth]] (payload token
   * novelty per part).

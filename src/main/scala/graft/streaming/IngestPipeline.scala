@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.dedup.Dedup
+import graft.model.StreamMessage
 import graft.store.MessageStore
 
 /** The hot-path ingest pipeline (SURVEY §3.3): validated, partitioned,
@@ -16,9 +17,9 @@ import graft.store.MessageStore
   * (`BucketManager.ts:72-97`) — with the reference's ~550 LoC of
   * batch/bucket FSMs collapsed into the micro-batch engine (S3-S5).
   * Every stored row, batch publish or streaming, takes the same [[commit]]
-  * path, and each committed batch pays one aggregate over its prepared
-  * rows (inside [[MessageStore.append]]), which feeds both the width
-  * guard and the commit marker.
+  * path: one exchange (the store layout) and one aggregate over the
+  * prepared rows (inside [[MessageStore.write]]), which feeds the width
+  * guard and the commit marker; live fan-out runs before the write.
   *
   * Design notes for scale:
   *  - NO watermark on the persist path: the reference accepts arbitrarily
@@ -29,35 +30,54 @@ import graft.store.MessageStore
   *    is at-least-once: a crash between append and checkpoint commit
   *    replays the batch, so appends are guarded by per-batch commit
   *    markers (skip when the marker exists). The residual window — crash
-  *    after append, before marker — leaves duplicates that the uniqueness
-  *    key makes harmless: read paths can apply [[Dedup.ingestDedup]], the
-  *    observable-semantics analog of the reference's upsert.
+  *    after fan-out or append, before marker — re-delivers the batch to
+  *    subscribers and leaves store duplicates that the uniqueness key
+  *    makes harmless: every read merges them away, the
+  *    observable-semantics analog of the reference's upsert. Subscribers
+  *    get every stored row at least once; no window loses a delivery.
   *  - The assignment filter is a small broadcast set refreshed per batch —
   *    the slowly-changing-state analog of StorageConfig polling (R7).
   */
 object IngestPipeline {
 
-  /** One micro-batch through the validation/partition/dedup chain:
-    * [[IngestMonitors.prepared]] (validate → assign) plus intra-batch
-    * dedup. `assigned` is the optional set of "stream_id::partition" keys
-    * this node stores (None ⇒ store everything). */
+  /** One micro-batch through validate → assign → store layout → dedup:
+    * [[IngestMonitors.prepared]], then [[MessageStore.layout]] (the
+    * `bucket` column and the batch's ONE exchange), then intra-batch
+    * [[Dedup.ingestDedup]] on the uniqueness key plus `bucket`. `bucket` is
+    * a function of `stream_id` and `ts`, so that key groups exactly like
+    * the uniqueness key alone; it also contains the layout's partition
+    * columns, so the dedup window runs inside the layout's partitions
+    * without an exchange of its own. `assigned` is the optional set of
+    * "stream_id::partition" keys this node stores (None ⇒ store
+    * everything). The result carries `bucket`. */
   def prepareBatch(
       batch: DataFrame,
       nowMs: Long,
-      assigned: Option[Set[String]] = None): DataFrame =
+      assigned: Option[Set[String]] = None,
+      granularityFor: Map[String, String] = Map.empty): DataFrame =
     // NTZ literal built directly from the UTC instant — session-timezone
     // independent (a Timestamp lit + cast would shift by the session zone)
-    Dedup.ingestDedup(IngestMonitors.prepared(batch,
-      lit(java.time.LocalDateTime.ofInstant(
-        java.time.Instant.ofEpochMilli(nowMs), java.time.ZoneOffset.UTC)),
-      assigned))
+    Dedup.ingestDedup(
+      MessageStore.layout(IngestMonitors.prepared(batch,
+        lit(java.time.LocalDateTime.ofInstant(
+          java.time.Instant.ofEpochMilli(nowMs), java.time.ZoneOffset.UTC)),
+        assigned), granularityFor),
+      StreamMessage.uniqueKey :+ "bucket")
 
   /** The one commit path for every write — [[graft.GraftEngine.publish]]
-    * and each streaming micro-batch ([[processBatch]]): prepare →
-    * [[MessageStore.append]] (one aggregate over the prepared rows, then
-    * the write) → `mark` → fan-out. `mark` sees what the append wrote and
-    * runs before any subscriber does; the prepared batch is cached across
-    * the aggregate, the write and the fan-out. */
+    * and each streaming micro-batch ([[processBatch]]). The prepared batch
+    * ([[prepareBatch]]) is cached, then [[MessageStore.write]] runs its
+    * one aggregate (which fills the cache) and the width guard, hands the
+    * batch to `onBatch` (live fan-out, in `StreamMessage.schema` columns),
+    * and writes it; `mark` runs last and sees what was written.
+    *
+    * Fan-out therefore waits for neither the parquet write nor the commit
+    * marker, like the reference's network fan-out, which never waits for
+    * `Storage.store` (`WebsocketServer.ts:327-345`). A batch the guard
+    * rejects delivers nothing; a batch that fails after `onBatch` (write
+    * or `mark`) leaves no marker, so its replay delivers again:
+    * subscribers get every committed row at least once, and the store
+    * still reads each row once (merge-on-read hides a re-append). */
   def commit(
       batch: DataFrame,
       batchId: Long,
@@ -68,12 +88,11 @@ object IngestPipeline {
       granularityFor: Map[String, String],
       widthCache: Option[MessageStore.BucketWidthCache])(
       mark: MessageStore.Appended => Unit = _ => ()): MessageStore.Appended = {
-    val prepared = prepareBatch(batch, nowMs, assigned).cache()
+    val prepared = prepareBatch(batch, nowMs, assigned, granularityFor).cache()
     try {
-      val appended = MessageStore.append(prepared, storePath, granularityFor,
-        widthCache = widthCache)
+      val appended = MessageStore.write(prepared, storePath, widthCache)(
+        onBatch(prepared.drop("bucket"), batchId))
       mark(appended)
-      onBatch(prepared, batchId)
       appended
     } finally prepared.unpersist()
   }
@@ -81,8 +100,9 @@ object IngestPipeline {
   /** One micro-batch commit ([[commit]]) guarded by a per-batch marker,
     * which makes replays (foreachBatch is at-least-once) idempotent — a
     * re-delivered batchId whose marker exists is skipped entirely. The
-    * marker lands after the append and before `onBatch`, so a batch that
-    * fails (e.g. the width guard) leaves none and its replay retries it.
+    * marker lands last, after `onBatch` and the write, so a batch that
+    * fails anywhere (e.g. the width guard) leaves none and its replay
+    * retries it.
     * Returns true when the batch was (newly) applied. */
   def processBatch(
       batch: DataFrame,
@@ -129,8 +149,9 @@ object IngestPipeline {
 
   /** Start the streaming ingest: source → prepare → bucketed store append.
     * `onBatch` is the subscriber fan-out hook (R1) — called with each
-    * prepared micro-batch so a serving layer can dispatch to live
-    * subscriptions while the same rows are persisted.
+    * non-empty prepared micro-batch before its rows are written, so a
+    * serving layer dispatches to live subscriptions without waiting for
+    * the store (at least once; see [[commit]]).
     *
     * `autoCompactEvery` > 0 runs the file-count compaction policy
     * ([[MessageStore.autoCompact]]) after every Nth committed batch — the

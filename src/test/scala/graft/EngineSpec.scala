@@ -150,6 +150,58 @@ class EngineSpec extends SparkSpec {
       keysOf(graft.store.MessageStore.openMerged(spark, ingested)).sorted)
   }
 
+  test("publish delivers the same rows, in the same formats, as streaming ingest") {
+    val now = 10000L
+    val batch = streamDataOf(
+      msg("a", 0, 1000L, 0), msg("a", 0, 2000L, 1), msg("a", 0, 2000L, 1),
+      msg("a", 1, 1000L, 0), msg("b", 2, 3000L, 0, payload = "not json"),
+      msg("b", 2, 4000L, 1))
+    def subscribe(reg: graft.serve.SubscriptionRegistry) = Seq(
+      reg.subscribe("x", "a", 0), reg.subscribe("y", "b", 2, format = "protocol"))
+    def drained(subs: Seq[graft.serve.SubscriptionRegistry#Subscription]) =
+      subs.map(s => Iterator.continually(s.queue.poll()).takeWhile(_ != null).toSet)
+    val engine = new GraftEngine(spark,
+      Files.createTempDirectory("graft-deliver-pub").toString)
+    val published = subscribe(engine.subscriptions)
+    assert(engine.publish(batch, now) == 4L)
+    val reg = new graft.serve.SubscriptionRegistry()
+    val ingested = subscribe(reg)
+    assert(graft.streaming.IngestPipeline.processBatch(batch, 0L,
+      Files.createTempDirectory("graft-deliver-ingest").toString,
+      Files.createTempDirectory("graft-deliver-ckpt").toString,
+      nowMs = now, onBatch = reg.dispatch))
+    val fromPublish = drained(published)
+    assert(fromPublish.map(_.size) == Seq(2, 1))
+    assert(fromPublish(1).head.startsWith("[31,[\"b\",2,4000,1,"))
+    assert(drained(ingested) == fromPublish)
+  }
+
+  /** One message whose `field` is null, published alone: the ingest gate
+    * must reject it, so nothing is stored or served. */
+  private def assertNullRejected(field: String, payload: String = "{}") = {
+    import org.apache.spark.sql.functions.lit
+    val engine = new GraftEngine(spark,
+      Files.createTempDirectory(s"graft-null-$field").toString)
+    val m = streamDataOf(msg("s", 0, 1000L, 0, payload = payload))
+    val nulled = m.withColumn(field, lit(null).cast(m.schema(field).dataType))
+    assert(engine.publish(nulled, 10000L) == 0L, field)
+    assert(engine.table.count() == 0, field)
+    assert(engine.last("s", 0, 10).toSeq == Seq(Resend.NoResend()), field)
+  }
+
+  test("ingest gate rejects a message with a null ts") {
+    assertNullRejected("ts")
+  }
+
+  test("ingest gate rejects a null encryption_type with a non-JSON payload") {
+    assertNullRejected("encryption_type", payload = "not json")
+  }
+
+  test("ingest gate rejects a null in any other required envelope field") {
+    Seq("stream_id", "stream_partition", "sequence_no", "publisher_id",
+      "msg_chain_id", "signature_type").foreach(assertNullRejected(_))
+  }
+
   test("ttlSweep expires by age with the reference's 3-day default") {
     val engine = new GraftEngine(spark,
       Files.createTempDirectory("graft-ttlsweep").toString)

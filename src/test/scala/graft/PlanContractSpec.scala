@@ -379,6 +379,50 @@ class PlanContractSpec extends SparkSpec {
     }
   }
 
+  test("committed batch: one exchange between source and writer, none in the aggregate") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val s = spark
+    import s.implicits._
+    // a narrow multi-partition source, like a MemoryStream batch
+    val batch = spark.createDataset(spark.sparkContext.parallelize((0 until 12).map(i =>
+      msg(if (i % 2 == 0) "s" else "t", 0, 1000L + i, i)), 6)).toDF()
+    val path = java.nio.file.Files.createTempDirectory("graft_plan_commit").toString
+    val reg = new graft.serve.SubscriptionRegistry()
+    reg.subscribe("c", "s", 0)
+    spark.listenerManager.register(listener)
+    try {
+      graft.streaming.IngestPipeline.commit(batch, 0L, path, None, 10000L,
+        reg.dispatch, Map.empty, None)()
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    object H extends AdaptiveSparkPlanHelper
+    import scala.jdk.CollectionConverters._
+    val executed = plans.asScala.toSeq
+    // aggregate, fan-out and write: each reads the cached prepared batch
+    assert(executed.size == 3, executed.mkString("\n"))
+    def exchanges(p: SparkPlan) = H.collect(p) { case e: Exchange => e }
+    executed.foreach(p => assert(exchanges(p).isEmpty, s"exchange outside the cache:\n$p"))
+    assert(executed.count(p => H.collect(p) { case a: BaseAggregateExec => a }.nonEmpty) == 1)
+    val cached = executed.flatMap(p => H.collect(p) {
+      case t: InMemoryTableScanExec => t.relation.cachedPlan
+    }).distinct
+    assert(cached.size == 1 && exchanges(cached.head).size == 1,
+      cached.map(_.treeString).mkString("\n"))
+  }
+
   test("dup-span and semdedup self-joins keep their single shared exchange") {
     // both sides of each bounded pair join must hash-partition on the
     // blocking key (gram fingerprint / cluster id) — losing the exchange

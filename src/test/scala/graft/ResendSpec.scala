@@ -62,6 +62,32 @@ class ResendSpec extends SparkSpec {
     assert(t1.queue.size() == 2)
   }
 
+  test("fan-out index: among many subscriptions on other parts, a part's " +
+      "subscribers get exactly their rows, each in its own format") {
+    val reg = new SubscriptionRegistry()
+    val others = (0 until 200).map(i => reg.subscribe(s"other-$i", s"x$i", i % 7))
+    val obj = reg.subscribe("obj-client", "s", 0)
+    val proto = reg.subscribe("proto-client", "s", 0, format = "protocol")
+    val raw = reg.subscribe("raw-client", "t", 1, format = "raw")
+    reg.unsubscribe("other-3", "x3", 3)
+    reg.dispatch(streamDataOf(
+      msg("s", 0, 1000, 0), msg("s", 0, 2000, 1), msg("s", 1, 1000, 0),
+      msg("t", 1, 3000, 0), msg("x3", 3, 1000, 0), msg("x5", 5, 1000, 0)), 0L)
+    def drain(sub: reg.Subscription) =
+      Iterator.continually(sub.queue.poll()).takeWhile(_ != null).toSeq.sorted
+    assert(drain(obj).map(seqOf) == Seq(0, 1))
+    assert(drain(proto) == Seq(
+      """[31,["s",0,1000,0,"publisher","1"],null,27,0,"{}",0,null]""",
+      """[31,["s",0,2000,1,"publisher","1"],null,27,0,"{}",0,null]"""))
+    assert(drain(raw) == Seq(
+      """[31,["t",1,3000,0,"publisher","1"],null,27,0,"{}",0,null]"""))
+    assert(drain(others(5)).size == 1)
+    assert((others.take(5) ++ others.drop(6)).forall(_.queue.isEmpty))
+  }
+
+  private def seqOf(objectMsg: String): Int =
+    "\"sequenceNumber\":(\\d+)".r.findFirstMatchIn(objectMsg).get.group(1).toInt
+
   test("resend-while-live: historical envelope first, then queued live rows") {
     val reg = new SubscriptionRegistry()
     val sd = streamDataOf(msg("s", 0, 1000, 0))

@@ -19,6 +19,24 @@ class ServeIngestMetricsSpec extends SparkSpec {
         """"content":"{\"hello\":\"wo\\rld\"}","signatureType":0,"signature":null}""")
   }
 
+  test("jsonEscape: the native pass equals the JsonEscapes replace chain") {
+    val s = spark
+    import s.implicits._
+    val inputs = Seq("", "plain", "q\"uote", "back\\slash\\\"", "\u00e9\u4e2d\ud83d\ude00\"",
+      (0 until 0x20).map(_.toChar).mkString, "a\u0001b\r\n\t\u001f\u007f", null)
+    val chain = Formats.JsonEscapes.foldLeft(col("v")) { case (acc, (from, to)) =>
+      replace(acc, lit(from), lit(to))
+    }
+    // a distributed source, so the generated code runs, not the
+    // driver-side interpreted fold of a local relation
+    val out = spark.createDataset(spark.sparkContext.parallelize(inputs, 2)).toDF("v")
+      .select(Formats.jsonEscape(col("v")).as("native"), chain.as("chain"))
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    assert(out.length == inputs.length)
+    out.foreach { case (native, expected) => assert(native == expected) }
+    assert(out(2)._1 == "q\\\"uote" && out.last._1 == null)
+  }
+
   test("protocolJson: v31 array shape; raw aliases protocol") {
     val sd = streamDataOf(msg("s", 0, 1000L, 0, "p", "c", payload = "{}"))
     val proto = Formats.format(sd, "protocol").collect().head.getString(0)

@@ -669,6 +669,96 @@ class StoreStreamingSpec extends SparkSpec {
     assert(new java.io.File(path).list().isEmpty)
   }
 
+  /** The Spark jobs `body` starts, counted by a listener on a local
+    * property only this call sets. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.op") == tag))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.op", tag)
+    try {
+      body
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      jobs.get()
+    } finally {
+      sc.setLocalProperty("graft.test.op", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("commit: a batch with one subscription runs at most five Spark jobs") {
+    val path = tmpDir("graft-jobs")
+    val ckpt = tmpDir("graft-jobs-ckpt")
+    val reg = new graft.serve.SubscriptionRegistry()
+    val sub = reg.subscribe("c", "s", 0)
+    // warm the store directories so the counted batch is a steady one
+    assert(IngestPipeline.processBatch(streamDataOf(msg("s", 0, 1000L, 0)), 0L,
+      path, ckpt, nowMs = 10000L, onBatch = reg.dispatch))
+    // more source partitions than cores, like a MemoryStream batch
+    val s = spark
+    import s.implicits._
+    val batch = spark.createDataset(spark.sparkContext.parallelize((0 until 20).map(i =>
+      msg(if (i % 2 == 0) "s" else "t", i % 3, 2000L + i, i)), 8)).toDF()
+    val jobs = jobsOf(assert(IngestPipeline.processBatch(batch, 1L, path, ckpt,
+      nowMs = 10000L, onBatch = reg.dispatch)))
+    assert(jobs <= 5, s"$jobs jobs")
+    assert(sub.queue.size() == 1 + 4) // seq 0, 6, 12, 18 of the counted batch
+  }
+
+  test("commit delivers before the marker: a failed marker re-delivers on " +
+      "replay and the store still reads each row once") {
+    val path = tmpDir("graft-atleastonce")
+    val ckpt = tmpDir("graft-atleastonce-ckpt")
+    val reg = new graft.serve.SubscriptionRegistry()
+    val sub = reg.subscribe("c", "s", 0)
+    val batch = streamDataOf(msg("s", 0, 1000L, 0), msg("s", 0, 2000L, 1))
+    // the marker directory's path is taken by a file: the marker write
+    // fails after fan-out and the store write have run
+    val blocker = new java.io.File(s"$ckpt/graft-committed")
+    assert(blocker.createNewFile())
+    intercept[java.io.IOException] {
+      IngestPipeline.processBatch(batch, 0L, path, ckpt, nowMs = 10000L,
+        onBatch = reg.dispatch)
+    }
+    assert(sub.queue.size() == 2)
+    assert(MessageStore.open(spark, path).count() == 2)
+    // the replay finds no marker: it delivers and appends again
+    assert(blocker.delete())
+    assert(IngestPipeline.processBatch(batch, 0L, path, ckpt, nowMs = 10000L,
+      onBatch = reg.dispatch))
+    assert(sub.queue.size() == 4)
+    assert(MessageStore.open(spark, path).count() == 4)
+    assert(keysOf(MessageStore.openMerged(spark, path)).sorted ==
+      Seq((1000L, 0, "publisher", "1"), (2000L, 1, "publisher", "1")))
+    // committed now: a further replay delivers nothing
+    assert(!IngestPipeline.processBatch(batch, 0L, path, ckpt, nowMs = 10000L,
+      onBatch = reg.dispatch))
+    assert(sub.queue.size() == 4)
+  }
+
+  test("commit: a batch the width guard rejects delivers nothing") {
+    val path = tmpDir("graft-guard-deliver")
+    val ckpt = tmpDir("graft-guard-deliver-ckpt")
+    val base = 1700000000000L
+    MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path)
+    val reg = new graft.serve.SubscriptionRegistry()
+    val sub = reg.subscribe("c", "s", 0)
+    intercept[IllegalStateException] {
+      IngestPipeline.processBatch(streamDataOf(msg("s", 0, base + 1000L, 1)), 0L,
+        path, ckpt, nowMs = base, onBatch = reg.dispatch,
+        granularityFor = Map("s" -> MessageStore.HourBucket))
+    }
+    assert(sub.queue.isEmpty)
+    assert(MessageStore.open(spark, path).count() == 1)
+  }
+
   test("compactStreamPart merges per-batch small files, preserving rows") {
     val path = tmpDir("graft-compact")
     // three appends -> three files in the same day bucket
