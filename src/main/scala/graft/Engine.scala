@@ -19,7 +19,7 @@ import graft.streaming.{DynamicAssignment, IngestPipeline}
   *  - read path: `last`/`from`/`range` serve the resend envelope in any
   *    format (§3.1-3.2), `metadata` the count/bytes/first/last endpoints
   *    (`Storage.ts:452-576`); each reads only its own stream-part's
-  *    buckets (`last` via [[MessageStore.requestLastBounded]], the others
+  *    buckets (`last` via [[MessageStore.collectLast]], the others
   *    via [[MessageStore.openStreamPart]]), with one merge-on-read rule;
   *  - live path: `subscribe` receives each ingested micro-batch (R1);
   *  - ops: `deleteExpired` enforces retention by bucket drop
@@ -104,12 +104,21 @@ final class GraftEngine(
       widthCache = Some(widthCache))
 
   // ---- reads (§3.1): resend envelope over the chosen format ----
+
+  /** The `n` newest messages of a stream-part, ascending, in the resend
+    * envelope. One Spark query in the steady state: coverage comes from the
+    * parquet footers of the newest day groups (no count job), and the wire
+    * format is projected inside the top-K plan, which is collected once
+    * (at most 10k rows) — see [[MessageStore.collectLast]]. The format and
+    * version are checked before the store is touched, so an unsupported
+    * one throws [[graft.serve.BadRequestException]] even for an empty or
+    * absent part. */
   def last(streamId: String, partition: Int, n: Int,
-      format: String = "object", version: Option[Int] = None): Iterator[Resend.Frame] =
-    // bounded scan: newest buckets only (Storage.ts:142-181 analog)
-    Resend.envelope(Formats.format(
-      MessageStore.requestLastBounded(spark, storePath, streamId, partition, n),
-      format, version))
+      format: String = "object", version: Option[Int] = None): Iterator[Resend.Frame] = {
+    val msg = Formats.wire(format, version).as("msg")
+    Resend.envelope(MessageStore.collectLast(spark, storePath, streamId, partition, n)(
+      _.select(msg)).iterator)
+  }
 
   def from(streamId: String, partition: Int, ref: MsgRef,
       format: String = "object", version: Option[Int] = None,

@@ -198,7 +198,11 @@ object Packing {
     * Scale: one corpus scan reduces to the metadata-sized histogram
     * (token lengths are bounded in practice); windows and the bucket
     * aggregate run over that bounded table. The corpus never
-    * shuffles. */
+    * shuffles. The `Window.orderBy(len)` windows have no partition key,
+    * so Spark runs them in one partition (its WindowExec warning), over
+    * exactly one row per distinct normalised length — k rows for a corpus
+    * of k distinct lengths, whatever its document count (pinned by
+    * PackingSpec). */
   def paddingPlan(docs: DataFrame, buckets: Int, budget: Long,
       tokens: Column = size(graft.text.TextAnalysis.wsTokens(col("text")))
   ): DataFrame = {

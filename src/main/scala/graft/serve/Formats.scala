@@ -178,10 +178,15 @@ object Formats {
     * `raw` and `protocol` differ only in HTTP framing, which lives in the
     * serving layer. */
   def format(messages: DataFrame, name: String, version: Option[Int] = None): DataFrame =
+    messages.select(wire(name, version).as("msg"))
+
+  /** The string column [[format]] projects. Building it validates the
+    * format name and version, so a caller can reject a bad request before
+    * it touches the store. */
+  def wire(name: String, version: Option[Int] = None): Column =
     name match {
-      case "protocol" | "raw" =>
-        messages.select(protocolJson(version.getOrElse(31)).as("msg"))
-      case "object" => messages.select(objectJson.as("msg"))
+      case "protocol" | "raw" => protocolJson(version.getOrElse(31))
+      case "object" => objectJson
       case other => throw new BadRequestException(
         s"Unknown format '$other' (supported: object, protocol, raw)")
     }

@@ -16,9 +16,11 @@ import graft.operators.BrokerQueries.MsgRef
   *  - a resend answers with `resending` → one `unicast` per message →
   *    `resent`, or a single `no_resend` when empty
   *    (`RequestHandler.ts:151-215`);
-  *  - delivery is pull-based over `toLocalIterator` — one partition of
-  *    result rows in driver memory at a time, the engine-side analog of the
-  *    reference's pause/resume backpressure (R6, `Connection.ts:70-80`);
+  *  - delivery of a result plan is pull-based over `toLocalIterator` —
+  *    one partition of result rows in driver memory at a time, the
+  *    engine-side analog of the reference's pause/resume backpressure (R6,
+  *    `Connection.ts:70-80`); the engine's bounded `last` instead hands
+  *    over its collected answer, at most 10k formatted rows;
   *  - live fan-out (R1) routes each ingested micro-batch to the
   *    subscriptions of its stream-part (`WebsocketServer.ts:327-345`);
   *    resend-while-live = envelope first, then the live queue (R5).
@@ -31,14 +33,19 @@ object Resend {
   final case class Resent() extends Frame { val kind = "resent" }
   final case class NoResend() extends Frame { val kind = "no_resend" }
 
-  /** Wrap a formatted result plan in the resend envelope, lazily: the first
-    * row decides resending-vs-no_resend, rows stream as unicasts. */
-  def envelope(formatted: DataFrame): Iterator[Frame] = {
-    val rows: Iterator[Row] = formatted.toLocalIterator().asScala
-    if (!rows.hasNext) Iterator(NoResend())
-    else Iterator(Resending()) ++ rows.map(r => Unicast(r.getString(0))) ++
+  /** Wrap formatted result rows (one wire string each) in the resend
+    * envelope, lazily: the first row decides resending-vs-no_resend, rows
+    * stream as unicasts. The engine's bounded `last` passes the rows it
+    * already collected; plans come through the `DataFrame` entry. */
+  def envelope(formatted: Iterator[Row]): Iterator[Frame] =
+    if (!formatted.hasNext) Iterator(NoResend())
+    else Iterator(Resending()) ++ formatted.map(r => Unicast(r.getString(0))) ++
       Iterator(Resent())
-  }
+
+  /** [[envelope]] over a formatted result plan, pulled with
+    * `toLocalIterator` (one result partition in driver memory at a time). */
+  def envelope(formatted: DataFrame): Iterator[Frame] =
+    envelope(formatted.toLocalIterator().asScala)
 
   /** The three resend shapes, pre-formatted (`format`: object|protocol|raw). */
   def last(streamData: DataFrame, streamId: String, partition: Int, n: Int,

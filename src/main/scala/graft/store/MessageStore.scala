@@ -1,7 +1,9 @@
 package graft.store
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.BrokerQueries.MsgRef
@@ -18,7 +20,7 @@ import graft.operators.BrokerQueries.MsgRef
   * on the persist path), and a time-bounded read picks its bucket
   * directories by name because the bucket is a monotone function of ts.
   *
-  * Every serving read ([[requestLastBounded]], [[openStreamPart]]) lists
+  * Every serving read ([[collectLast]], [[openStreamPart]]) lists
   * one stream-part directory and scans only the buckets it selects; the
   * merge-on-read decision for those buckets is made in one place (the
   * private `scan`). At 100 TB: a request's I/O is bounded by its own
@@ -346,34 +348,41 @@ object MessageStore {
     finally out.close()
   }
 
-  /** True when the bucket's `_clean` marker exists and still matches the
-    * directory's parquet-file count — i.e. no append since the marker was
-    * stamped. One directory listing (marker presence and file count come
-    * from the same listStatus) plus the marker read when present;
-    * conservative on any read failure. */
-  private[store] def isCleanBucket(fs: org.apache.hadoop.fs.FileSystem,
-      bucket: Path): Boolean =
-    try {
-      val entries = fs.listStatus(bucket)
-      val hasMarker = entries.exists(f => f.isFile && f.getPath.getName == CleanMarker)
-      if (!hasMarker) false
-      else {
-        val files = entries
-          .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        val in = fs.open(new Path(bucket, CleanMarker))
-        val recorded =
-          try new String(in.readAllBytes(), "UTF-8").trim.toIntOption
-          finally in.close()
-        recorded.contains(files)
-      }
-    } catch { case _: java.io.IOException => false }
-
   /** One live bucket directory: its (unescaped) partition value, its path,
-    * and whether its `_clean` marker is valid — checked lazily, so only
-    * the buckets a read selects pay the marker listing. */
+    * and two facts read lazily from ONE listing of the directory, so only
+    * the buckets a read selects pay for it:
+    *  - `clean`: the `_clean` marker exists and still matches the
+    *    directory's parquet-file count, i.e. no append since it was stamped
+    *    (plus the marker read when present; conservative on any read
+    *    failure);
+    *  - `rows`: the physical row count (replays included), summed from the
+    *    parquet footers' block row counts — no data page is read. */
   private final class Bucket(val name: String, val path: Path,
       fs: org.apache.hadoop.fs.FileSystem) {
-    lazy val clean: Boolean = isCleanBucket(fs, path)
+    private lazy val files: Seq[org.apache.hadoop.fs.FileStatus] =
+      try fs.listStatus(path).toSeq.filter(_.isFile)
+      catch { case _: java.io.IOException => Nil }
+    private def dataFiles = files.filter(_.getPath.getName.endsWith(".parquet"))
+
+    lazy val clean: Boolean =
+      files.exists(_.getPath.getName == CleanMarker) &&
+        (try {
+          val in = fs.open(new Path(path, CleanMarker))
+          val recorded =
+            try new String(in.readAllBytes(), "UTF-8").trim.toIntOption
+            finally in.close()
+          recorded.contains(dataFiles.size)
+        } catch { case _: java.io.IOException => false })
+
+    def rows: Long = {
+      import org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+      dataFiles.map { f =>
+        ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, fs.getConf), NO_FILTER)
+          .getBlocks.asScala.map(_.getRowCount).sum
+      }.sum
+    }
   }
 
   /** The live buckets of one stream-part directory (none when it does not
@@ -464,64 +473,73 @@ object MessageStore {
       .ofInstant(java.time.Instant.ofEpochMilli(ms), java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter.ofPattern(granularity))
 
+  /** Bounded last-N over the physical layout, as a DataFrame of the
+    * stored columns: [[collectLast]] with no wire shape, over local rows.
+    * Used where a plan is wanted (the q_last_bounded gate, specs); the
+    * serving read [[graft.GraftEngine.last]] calls [[collectLast]] with its
+    * wire format instead. */
+  def requestLastBounded(
+      spark: SparkSession, path: String, streamId: String, partition: Int,
+      limit: Int): DataFrame = {
+    val rows = collectLast(spark, path, streamId, partition, limit)(identity)
+    spark.createDataFrame(rows.toSeq.asJava,
+      if (rows.isEmpty) graft.model.StreamMessage.schema else rows.head.schema)
+  }
+
   /** Bounded last-N over the physical layout — the reference's iterative
     * bucket expansion (`Storage.ts:142-181`): per-bucket row counts decide
     * how many newest buckets cover `limit` (clamped to
     * [[graft.operators.BrokerQueries.MaxResendLast]]), then top-K over just
-    * those buckets. A deep stream-part answers last-N from its newest
-    * buckets instead of scanning years of history. Falls back to the whole
-    * part when it holds fewer than `limit` rows.
+    * those buckets, passed through `shape` (a row-wise projection such as
+    * the wire format) and collected — ONE Spark query in the steady state.
+    * A deep stream-part answers last-N from its newest buckets instead of
+    * scanning years of history. Falls back to the whole part when it holds
+    * fewer than `limit` rows.
     *
-    * All bucket counts come from ONE distributed job (a groupBy on the
-    * `bucket` partition column reads parquet footers only — no data
-    * pages); the earlier shape launched one serial driver-side count job
-    * per bucket, which a sparse stream-part spanning hundreds of buckets
-    * paid as hundreds of sequential job launches. */
-  def requestLastBounded(
+    * Coverage reads no data and runs no job, like the reference reading its
+    * bucket table's per-bucket counts: the part's UTC day groups are walked
+    * newest-first on the driver, each adding the physical row count of its
+    * parquet footers, until the count reaches the clamped limit. The oldest
+    * group reached is never counted (there is nothing older to decide on),
+    * so a part with one day group reads no footer at all, and no file
+    * outside the covering groups is ever opened.
+    *
+    * The answer is at most 10k rows by the clamp, so it is collected once;
+    * the widen check reads the collected length instead of running the
+    * plan again. `shape` must keep one output row per input row. */
+  def collectLast(
       spark: SparkSession, path: String, streamId: String, partition: Int,
-      limit: Int): DataFrame = {
+      limit: Int)(shape: DataFrame => DataFrame): Array[Row] = {
     import graft.operators.BrokerQueries
     val buckets = partBuckets(spark, path, streamId, partition)
-    if (buckets.isEmpty) return emptyRelation(spark)
     val clamped = math.min(math.max(limit, 0), BrokerQueries.MaxResendLast)
-    // one job: per-bucket counts, newest first (bucket format is sortable)
-    val counts = reader(spark, path).parquet(partDir(path, streamId, partition).toString)
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
     // coverage selection works in whole UTC days (the first 10 chars of
     // either bucket format): when a stream's granularity changed mid-day,
     // a day bucket and that day's hour buckets coexist and overlap in
     // time, so name order between them is NOT newest-first — selecting a
     // whole day at a time keeps the expansion exact for any mix (a
     // pure-hour tail day just reads its few extra hour buckets)
-    val dayGroups = counts.groupBy(_._1.take(10)).toSeq
-      .sortBy(_._1)(Ordering[String].reverse)
+    val days = buckets.groupBy(_.name.take(10)).toSeq
+      .sortBy(_._1)(Ordering[String].reverse).map(_._2).iterator
+    val needed = Seq.newBuilder[Bucket]
     var covered = 0L
-    val neededNames = dayGroups.takeWhile { case (_, bs) =>
-      val take = covered < clamped
-      if (take) covered += bs.map(_._2).sum
-      take
-    }.flatMap(_._2).map(_._1).toSet
-    val needed = buckets.filter(b => neededNames.contains(b.name))
-    if (needed.isEmpty) return emptyRelation(spark)
-    // result rows are clamped to MaxResendLast (10k) by contract, so the
-    // answer is collected once — the widen check below would otherwise
-    // re-execute the whole dedup+top-K job when the caller consumes the
-    // returned frame (count + lazy re-read = 2× the serving latency)
-    def lastOver(bs: Seq[Bucket]): Array[org.apache.spark.sql.Row] =
-      BrokerQueries.requestLast(scan(spark, path, bs), streamId, partition, limit)
+    while (covered < clamped && days.hasNext) {
+      val group = days.next()
+      needed ++= group
+      if (days.hasNext) covered += group.map(_.rows).sum
+    }
+    val covering = needed.result()
+    if (covering.isEmpty) return Array.empty
+    def lastOver(bs: Seq[Bucket]): Array[Row] =
+      shape(BrokerQueries.requestLast(scan(spark, path, bs), streamId, partition, limit))
         .collect()
-    val res = lastOver(needed)
-    // physical per-bucket counts over-count replayed rows, so the covering
-    // buckets can hold fewer UNIQUE rows than `limit`; widen to the whole
-    // part in that (rare — only with replays in the tail buckets) case
-    val rows =
-      if (needed.length < buckets.size && res.length < clamped) lastOver(buckets)
-      else res
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toIndexedSeq, 1),
-      if (rows.isEmpty) graft.model.StreamMessage.schema else rows.head.schema)
+    val res = lastOver(covering)
+    // footer counts are physical and over-count replayed rows, so the
+    // covering buckets can hold fewer UNIQUE rows than `limit`; widen to
+    // the whole part in that (rare — only with replays in the tail
+    // buckets) case
+    if (covering.length < buckets.size && res.length < clamped) lastOver(buckets)
+    else res
   }
 
   /** Compact one stream-part's buckets: micro-batch ingest leaves one file

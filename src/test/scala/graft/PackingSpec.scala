@@ -204,6 +204,29 @@ class PackingSpec extends SparkSpec {
       got.mkString(","))
   }
 
+  test("paddingPlan: the single-partition length window reads one row per " +
+      "distinct length") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val k = 7
+    val docs = spark.range(12000)
+      .select(col("id").as("doc_id"), (col("id") % k + 1).as("len_in"))
+    val plan = Packing.paddingPlan(docs, buckets = 3, budget = 100L,
+      tokens = col("len_in"))
+    assert(plan.collect().map(_.getAs[Long]("docs")).sum == 12000L)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val executed = plan.queryExecution.executedPlan
+    assert(helper.find(executed)(_.isInstanceOf[WindowExec]).isDefined)
+    // the rows the windows' one single-partition exchange carried
+    val fed = helper.collect(executed) {
+      case e: ShuffleExchangeExec if e.outputPartitioning == SinglePartition =>
+        e.metrics("shuffleRecordsWritten").value
+    }
+    assert(fed == Seq(k.toLong), fed)
+  }
+
   test("paddingApply: plan buckets executed to (doc, batch); unbatchable docs NULL") {
     val s = spark
     import s.implicits._

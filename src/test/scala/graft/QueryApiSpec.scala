@@ -96,6 +96,18 @@ class QueryApiSpec extends SparkSpec {
       big.error.contains("Unsupported protocol version 4294967327"), big)
   }
 
+  test("unsupported version is a 400 even when no row would be served") {
+    // absent partition and count=0 both answer from no store rows; the
+    // version is still checked, before the store is touched
+    Seq(get("last", partition = "7",
+        query = Map("format" -> "protocol", "version" -> "29")),
+      get("last", query = Map("count" -> "0", "format" -> "protocol",
+        "version" -> "29"))).foreach { r =>
+      val e = errorOf(r)
+      assert(e.status == 400 && e.error.contains("Unsupported protocol version 29"), e)
+    }
+  }
+
   test("parameter validation precedes the oversized-partition empty answer") {
     // bogus format + oversized partition: the reference validates the
     // request before querying storage, so this is a 400, not no_resend

@@ -126,7 +126,7 @@ class StoreStreamingSpec extends SparkSpec {
     assert(none.count() == 0 && none.columns.contains("payload"))
   }
 
-  test("requestLastBounded: N spanning several of many buckets, one count job") {
+  test("requestLastBounded: N spanning several of many buckets, no count job") {
     val path = tmpDir("graft-manybuckets")
     val dayMs = 86400000L
     val base = 1700000000000L
@@ -134,10 +134,15 @@ class StoreStreamingSpec extends SparkSpec {
     val msgs = (0 until 50).map(i =>
       msg("s", 0, base + (i / 2) * dayMs + (i % 2) * 1000L, 0))
     MessageStore.append(streamDataOf(msgs: _*), path)
-    assert(new java.io.File(s"$path/stream_id=s/stream_partition=0").list().length == 25)
+    val partDir = new java.io.File(s"$path/stream_id=s/stream_partition=0")
+    assert(partDir.list().length == 25)
+    val want = keysOf(BrokerQueries.requestLast(MessageStore.open(spark, path), "s", 0, 7))
+    // a file no parquet reader can open, in the oldest bucket: coverage
+    // must not open any file outside the covering day groups
+    val oldest = new java.io.File(partDir, partDir.list().min)
+    Files.writeString(new java.io.File(oldest, "junk.parquet").toPath, "not parquet")
     // N=7 needs the newest 4 buckets (2 rows each)
     val got = keysOf(MessageStore.requestLastBounded(spark, path, "s", 0, 7))
-    val want = keysOf(BrokerQueries.requestLast(MessageStore.open(spark, path), "s", 0, 7))
     assert(got == want && got.length == 7)
   }
 
@@ -710,6 +715,32 @@ class StoreStreamingSpec extends SparkSpec {
       nowMs = 10000L, onBatch = reg.dispatch)))
     assert(jobs <= 5, s"$jobs jobs")
     assert(sub.queue.size() == 1 + 4) // seq 0, 6, 12, 18 of the counted batch
+  }
+
+  test("engine.last runs one query: at most 2 jobs on a never-compacted " +
+      "part, 1 on a compacted one") {
+    val path = tmpDir("graft-last-jobs")
+    val engine = new GraftEngine(spark, path)
+    val dayMs = 86400000L
+    val base = 1700000000000L
+    // two days of 10 rows each, appended in two batches so compaction has
+    // two files per bucket to merge
+    val msgs = (0 until 20).map(i =>
+      msg("s", 0, base + (i / 10) * dayMs + (i % 10) * 1000L, i))
+    MessageStore.append(streamDataOf(msgs.filter(_.sequence_no % 2 == 0): _*), path)
+    MessageStore.append(streamDataOf(msgs.filter(_.sequence_no % 2 == 1): _*), path)
+    // N=5 lies inside the newest day
+    def lastSeqs(): Seq[Int] = engine.last("s", 0, 5, format = "protocol").collect {
+      case graft.serve.Resend.Unicast(m) => m.split(',')(4).toInt
+    }.toSeq
+    var served = Seq.empty[Int]
+    val dirtyJobs = jobsOf { served = lastSeqs() }
+    assert(served == (15 until 20))
+    assert(dirtyJobs <= 2, s"$dirtyJobs jobs")
+    assert(engine.compact("s", 0) == 2)
+    val cleanJobs = jobsOf { served = lastSeqs() }
+    assert(served == (15 until 20))
+    assert(cleanJobs == 1, s"$cleanJobs jobs")
   }
 
   test("commit delivers before the marker: a failed marker re-delivers on " +
