@@ -28,13 +28,7 @@ import graft.streaming.{DynamicAssignment, IngestPipeline}
 final class GraftEngine(
     val spark: SparkSession,
     val storePath: String,
-    assigned: Option[Set[String]] = None,
-    /** Per-stream bucket granularity (stream id → [[MessageStore.HourBucket]]
-      * for hot streams; absent streams bucket at [[MessageStore.DayBucket]])
-      * — the reference sizes buckets per stream-part volume the same way
-      * (`BucketManager.ts:50-51`). Reads stay exact across any mix: see
-      * [[MessageStore.openStreamPart]]. */
-    granularityFor: Map[String, String] = Map.empty) {
+    assigned: Option[Set[String]] = None) {
 
   // The engine's NTZ columns carry UTC wall-clock (epoch-ms in the
   // reference); pin the session zone so TIMESTAMP casts (serve-format
@@ -43,31 +37,6 @@ final class GraftEngine(
   spark.conf.set("spark.sql.session.timeZone", "UTC")
 
   val subscriptions = new SubscriptionRegistry()
-
-  /** Engine-lifetime bucket-width memory for the append guard: both write
-    * paths ([[publish]] and [[startIngest]]) share it, so the guard lists
-    * each stream's bucket directories once per engine instead of once per
-    * append. The engine is the single writer of its store (same contract
-    * as compaction), and it is also the only component that runs retention
-    * — the one operation that can invalidate a width entry (an emptied day
-    * makes a width flip newly legal) — so every retention entry point
-    * below invalidates the dropped streams before returning. */
-  private val widthCache = new MessageStore.BucketWidthCache
-
-  /** Forget cached widths for every stream a retention sweep touched, so a
-    * width flip onto a now-empty day re-learns from the filesystem instead
-    * of being rejected by a stale entry. Dropped paths carry the writer's
-    * escaped `stream_id=` segment; unescape or streams with reserved
-    * characters ('/', '%') would silently stay cached. */
-  private def invalidateDropped(dropped: Seq[String]): Seq[String] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
-    dropped
-      .flatMap(_.split('/').find(_.startsWith("stream_id=")))
-      .map(seg => unescapePathName(seg.stripPrefix("stream_id=")))
-      .distinct
-      .foreach(widthCache.invalidate)
-    dropped
-  }
 
   /** R7 — live storage-assignment state: seeded from the constructor,
     * refreshed via [[updateAssignment]]; the streaming ingest re-reads it
@@ -91,7 +60,7 @@ final class GraftEngine(
     * out and persisted. Returns accepted-row count. */
   def publish(messages: DataFrame, nowMs: Long = System.currentTimeMillis()): Long =
     IngestPipeline.commit(messages, -1L, storePath, assignment.get(), nowMs,
-      subscriptions.dispatch, granularityFor, Some(widthCache))().rows
+      subscriptions.dispatch)().rows
 
   /** Streaming publish (the hot path). The assignment supplier is read at
     * every batch boundary, so [[updateAssignment]] reshapes a running
@@ -100,14 +69,13 @@ final class GraftEngine(
       triggerMs: Long = 1000L, autoCompactEvery: Int = 0): StreamingQuery =
     IngestPipeline.start(source, storePath, checkpointPath, assignment.get _,
       triggerMs, onBatch = subscriptions.dispatch,
-      granularityFor = granularityFor, autoCompactEvery = autoCompactEvery,
-      widthCache = Some(widthCache))
+      autoCompactEvery = autoCompactEvery)
 
   // ---- reads (§3.1): resend envelope over the chosen format ----
 
   /** The `n` newest messages of a stream-part, ascending, in the resend
     * envelope. One Spark query in the steady state: coverage comes from the
-    * parquet footers of the newest day groups (no count job), and the wire
+    * parquet footers of the newest buckets (no count job), and the wire
     * format is projected inside the top-K plan, which is collected once
     * (at most 10k rows) — see [[MessageStore.collectLast]]. The format and
     * version are checked before the store is touched, so an unsupported
@@ -178,17 +146,16 @@ final class GraftEngine(
     * `DeleteExpiredCmd.ts:91`). Returns dropped bucket paths. */
   def deleteExpired(retentionDays: Int = 365,
       nowMs: Long = System.currentTimeMillis()): Seq[String] =
-    invalidateDropped(MessageStore.dropExpiredBuckets(spark, storePath,
-      MsgRef(nowMs - retentionDays * 86400000L, 0)))
+    MessageStore.dropExpiredBuckets(spark, storePath,
+      MsgRef(nowMs - retentionDays * 86400000L, 0))
 
   /** Per-stream retention (`DeleteExpiredCmd.ts:86-107`): each stream
     * expires against its own `storageDays`, defaulting like the reference
     * to 365 for streams without an explicit policy. */
   def deleteExpired(storageDays: Map[String, Int], defaultDays: Int,
       nowMs: Long): Seq[String] =
-    invalidateDropped(
-      MessageStore.dropExpiredBucketsPerStream(spark, storePath, streamId =>
-        MsgRef(nowMs - storageDays.getOrElse(streamId, defaultDays) * 86400000L, 0)))
+    MessageStore.dropExpiredBucketsPerStream(spark, storePath, streamId =>
+      MsgRef(nowMs - storageDays.getOrElse(streamId, defaultDays) * 86400000L, 0))
 
   /** S4 TTL sweep — the non-storage node's transient-relay window
     * (`USING TTL 259200`, `BatchManager.ts:12-14`): age-expire whole
@@ -196,8 +163,8 @@ final class GraftEngine(
     * the reference's 3 days. Returns dropped bucket paths. */
   def ttlSweep(ttlSeconds: Long = 259200L,
       nowMs: Long = System.currentTimeMillis()): Seq[String] =
-    invalidateDropped(MessageStore.dropAgedBuckets(spark, storePath,
-      MsgRef(nowMs - ttlSeconds * 1000L, 0)))
+    MessageStore.dropAgedBuckets(spark, storePath,
+      MsgRef(nowMs - ttlSeconds * 1000L, 0))
 
   /** Release the engine's process-local serving resources (the
     * subscription registry handle). The SparkSession is caller-owned. */

@@ -9,7 +9,7 @@
   *    replay-deduped), the three read shapes (last-N / from / range),
   *    metadata, retention, TTL, compaction.
   *  - [[graft.store.MessageStore]] — the bucketed physical store:
-  *    partitioned parquet, per-stream day/hour granularity, merge-on-read
+  *    partitioned parquet, one UTC-day bucket per row's ts, merge-on-read
   *    upsert, crash-safe compaction with clean markers, bounded last-N.
   *  - [[graft.operators.BrokerQueries]] — the logical read-path operators
   *    over any stream_data relation.

@@ -11,16 +11,25 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The reference's HTTP result formats (S10 — `src/http/DataQueryFormat.ts:
   * 11-46`): `object` (JSON of `toObject()`), `protocol` (serialized message
   * array), `raw` (newline-delimited serialized). Here each format is a
-  * narrow projection producing one string column — the serving layer streams
-  * the rows out with `toLocalIterator`, so formatting work is distributed
-  * while delivery stays incremental (the reference's header/delimiter/footer
-  * framing is a serving-layer concern, not a plan concern).
+  * narrow projection producing one string column, so formatting work runs
+  * inside the read's own plan: `last` collects its clamped top-K already
+  * formatted, `from`/`range` pull their rows incrementally with
+  * `toLocalIterator` (the reference's header/delimiter/footer framing is a
+  * serving-layer concern, not a plan concern).
   *
   * `content` is carried as the stored serialized string, exactly like the
   * reference's payload blob round-trip (`DataQueryFormat.ts:33-40` formats
   * re-serialize the stored message rather than re-encode content).
   */
 object Formats {
+
+  /** The format names every entry point accepts: the HTTP `format`
+    * parameter, [[wire]], [[frame]] and live subscriptions. */
+  val Names: Seq[String] = Seq("object", "protocol", "raw")
+
+  /** The message for a name outside [[Names]]. */
+  def unknown(name: String): String =
+    s"Unknown format '$name' (supported: ${Names.mkString(", ")})"
 
   /** JSON.stringify's full escape table: backslash and quote first (so
     * later-inserted backslashes are never re-escaped), the five
@@ -187,8 +196,7 @@ object Formats {
     name match {
       case "protocol" | "raw" => protocolJson(version.getOrElse(31))
       case "object" => objectJson
-      case other => throw new BadRequestException(
-        s"Unknown format '$other' (supported: object, protocol, raw)")
+      case other => throw new BadRequestException(unknown(other))
     }
 
   /** HTTP body chunks for a formatted result — the reference's incremental
@@ -206,8 +214,7 @@ object Formats {
       case "object" | "protocol" =>
         val joined = rows.zipWithIndex.map { case (m, i) => if (i == 0) m else "," + m }
         Iterator("[") ++ joined ++ Iterator("]")
-      case other => throw new BadRequestException(
-        s"Unknown format '$other' (supported: object, protocol, raw)")
+      case other => throw new BadRequestException(unknown(other))
     }
   }
 }

@@ -74,8 +74,6 @@ object QueryApi {
       .map(v => if (neg) -v else v)
   }
 
-  private val Formats = Set("object", "protocol", "raw")
-
   def handle(engine: GraftEngine, req: QueryRequest)
       : Either[ApiError, Iterator[Resend.Frame]] = {
     def bad(msg: String) = Left(ApiError(400, msg))
@@ -89,7 +87,7 @@ object QueryApi {
         // HTTP handler and only then queries storage, so a bogus format
         // is a 400 even when the partition points at nothing
         val formatName = q.getOrElse("format", "object")
-        if (!Formats.contains(formatName))
+        if (!Formats.Names.contains(formatName))
           bad(s"""Query parameter "format" is invalid: ${q.getOrElse("format", "")}""")
         else {
           val versionRaw = q.get("version")

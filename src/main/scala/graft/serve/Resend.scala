@@ -94,8 +94,7 @@ final class SubscriptionRegistry(queueCapacity: Int = 10000) extends AutoCloseab
       queue: LinkedBlockingQueue[String], format: String = "object") {
     // validated at construction so a directly-built Subscription can't
     // reach offer()'s dispatch with a name that silently serves `object`
-    require(Set("object", "protocol", "raw")(format),
-      s"Unknown format '$format' (supported: object, protocol, raw)")
+    require(Formats.Names.contains(format), Formats.unknown(format))
   }
 
   /** stream-part → its subscriptions by subscriber id; a part with none

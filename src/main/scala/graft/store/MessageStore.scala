@@ -13,7 +13,7 @@ import graft.operators.BrokerQueries.MsgRef
   * `BucketManager.ts:327-344`) re-expressed as a parquet table partitioned
   * by `(stream_id, stream_partition, bucket)`.
   *
-  * The bucket is a derived *hour truncation of ts* (sortable string
+  * The bucket is a derived *UTC-day truncation of ts* (sortable string
   * partition value), which replaces the reference's stateful BucketManager
   * entirely (SURVEY §4): bucket routing is a map-stage expression, late
   * rows land in their historical bucket by construction (R2 — no watermark
@@ -27,112 +27,36 @@ import graft.operators.BrokerQueries.MsgRef
   * stream-part and window, never the store; per-bucket file counts stay
   * bounded by the ingest micro-batch cadence (one file per bucket per
   * batch per writer task);
-  * retention is a metadata-only directory drop, mirroring the reference's
-  * bucket-granular DELETE (`DeleteExpiredCmd.ts:135-161`).
+  * retention drops whole bucket directories, mirroring the reference's
+  * bucket-granular DELETE (`DeleteExpiredCmd.ts:135-161`), and reads at
+  * most the one day per stream-part that straddles its cutoff.
   */
 object MessageStore {
 
-  /** Bucket granularity — like the reference's size-capped buckets
-    * (100 MB / 500k records, `BucketManager.ts:50-51`), the right bucket
-    * width depends on per-stream volume: day for ordinary streams, hour
-    * for hot ones. Day is the default; hour-granular pruning is still
-    * available through ts predicates on the row-level min/max stats. */
+  /** The store's one bucket width: the UTC day of `ts`. The reference
+    * sizes buckets by volume (100 MB / 500k records,
+    * `BucketManager.ts:50-51`); here a day bucket of a hot stream is
+    * bounded instead by the parquet row-group stats on `ts`, which prune
+    * `from`/`range` reads inside the day. Because a bucket is a fixed
+    * function of `ts`, a replayed row always lands in its original's
+    * bucket, so the bucket-local merge (reads and compaction) is exact. */
   val DayBucket = "yyyy-MM-dd"
-  val HourBucket = "yyyy-MM-dd-HH"
 
   /** Bucket partition value of a message timestamp (sortable,
     * filesystem-safe). */
-  def bucketOf(ts: Column, granularity: String = DayBucket): Column =
-    date_format(ts, granularity)
-
-  /** Per-stream bucket value: hot streams get their own granularity
-    * (typically [[HourBucket]]), everything else the default — the analog
-    * of the reference sizing buckets per stream-part volume
-    * (`BucketManager.ts:50-51` caps are per stream's live bucket). One
-    * codegen'd `when` branch per DISTINCT granularity (streams of a policy
-    * become an `isInCollection` set), so the expression tree is O(policies)
-    * even with thousands of hot streams — a per-stream chain would rebuild
-    * the giant-literal-tree problem CentroidRank exists to avoid.
-    *
-    * Only [[DayBucket]]/[[HourBucket]] are accepted: [[openStreamPart]]'s
-    * bucket-name window and the bounded read's day-grouping are proven for exactly
-    * these two widths — an unvalidated coarser pattern (e.g. month) would
-    * silently prune in-range buckets. */
-  def bucketOfPerStream(ts: Column, streamId: Column,
-      granularityFor: Map[String, String],
-      default: String = DayBucket): Column = {
-    (granularityFor.values.toSet + default).foreach { g =>
-      require(g == DayBucket || g == HourBucket,
-        s"unsupported bucket granularity '$g' (supported: $DayBucket, $HourBucket)")
-    }
-    granularityFor.groupBy(_._2).toSeq.sortBy(_._1)
-      .foldLeft(bucketOf(ts, default)) { case (acc, (g, entries)) =>
-        when(streamId.isInCollection(entries.keys.toSeq.sorted), bucketOf(ts, g))
-          .otherwise(acc)
-      }
-  }
-
-  /** Driver-held (stream, UTC day) → bucket-width memory for the width
-    * guard: a steady ingest query appends to the same streams batch after
-    * batch, and without this every [[append]] re-lists every
-    * touched stream's bucket directories — at thousands of buckets per
-    * stream that's a per-micro-batch driver FS sweep for information that
-    * never changes (a day's width is fixed for its lifetime). The cache is
-    * the metastore stand-in: a stream's directories are listed ONCE (on
-    * its first touched batch), then every later batch checks and records
-    * widths in memory — zero FS listing on the steady path.
-    *
-    * Staleness is one-sided by construction: entries only ever say "this
-    * day holds this width", which stays true for as long as the day has
-    * data. Compaction preserves bucket names, so no invalidation is
-    * needed; RETENTION can empty a day (making a width flip newly legal),
-    * and a stale entry then rejects that flip conservatively — call
-    * [[invalidate]] for streams whose buckets were dropped (or [[clear]]
-    * after a store-wide sweep) to re-learn from the filesystem. Never
-    * share a cache across stores, and never use one beside a concurrent
-    * foreign writer — same single-writer contract as compaction. */
-  final class BucketWidthCache {
-    // widths present per (stream, day): a set, so a pre-guard store that
-    // already holds both widths on one day keeps failing appends of
-    // either width exactly like the filesystem check would
-    private val known =
-      scala.collection.mutable.Map[(String, String), Set[String]]()
-    private val listed = scala.collection.mutable.Set[String]()
-    private[store] def widthsOf(stream: String, day: String): Set[String] =
-      synchronized(known.getOrElse((stream, day), Set.empty))
-    private[store] def isListed(stream: String): Boolean =
-      synchronized(listed.contains(stream))
-    // day → widths from a stream's directory listing or a landed append;
-    // either way the stream counts as listed from then on
-    private[store] def record(stream: String,
-        widths: Map[String, Set[String]]): Unit = synchronized {
-      widths.foreach { case (d, ws) =>
-        known((stream, d)) = known.getOrElse((stream, d), Set.empty) ++ ws
-      }
-      listed += stream
-    }
-    /** Forget one stream (call after retention dropped its buckets). */
-    def invalidate(stream: String): Unit = synchronized {
-      listed -= stream
-      known.filterInPlace { case ((s, _), _) => s != stream }
-    }
-    /** Forget everything (call after a store-wide retention sweep). */
-    def clear(): Unit = synchronized { known.clear(); listed.clear() }
-  }
+  def bucketOf(ts: Column): Column = date_format(ts, DayBucket)
 
   /** The store's partition columns, and the hash key of every append's
     * layout ([[layout]]). */
   private val PartitionCols: Seq[String] = Seq("stream_id", "stream_partition", "bucket")
 
   /** Lay a message batch out for the store: its rows gain the `bucket`
-    * column, bucketed per stream (see [[bucketOfPerStream]]: streams in
-    * `granularityFor` get their own width, all others `default`), and are
-    * hash-partitioned on [[PartitionCols]] into `defaultParallelism`
-    * partitions — ONE exchange. Everything downstream keyed on a superset
-    * of those columns inherits the partitioning: the ingest dedup window
-    * (uniqueness key + bucket), [[write]]'s aggregate, and the write itself,
-    * which lands one file per bucket per batch because each bucket sits in
-    * exactly one partition.
+    * column ([[bucketOf]]) and are hash-partitioned on [[PartitionCols]]
+    * into `defaultParallelism` partitions — ONE exchange. Everything
+    * downstream keyed on a superset of those columns inherits the
+    * partitioning: the ingest dedup window (uniqueness key + bucket),
+    * [[write]]'s aggregate, and the write itself, which lands one file per
+    * bucket per batch because each bucket sits in exactly one partition.
     *
     * The source is coalesced (narrow) to the same width first: a
     * MemoryStream batch carries one partition per `addData`, and without
@@ -143,13 +67,10 @@ object MessageStore {
     * append collapsed to 6 tasks spending 8 s wall / 3 s CPU on ~1,200
     * dir+file creations); pinning it to defaultParallelism keeps one file
     * per bucket while spreading the filesystem work across the cluster. */
-  def layout(messages: DataFrame,
-      granularityFor: Map[String, String] = Map.empty,
-      default: String = DayBucket): DataFrame = {
+  def layout(messages: DataFrame): DataFrame = {
     val width = messages.sparkSession.sparkContext.defaultParallelism
     messages.coalesce(width)
-      .withColumn("bucket", bucketOfPerStream(col("ts"), col("stream_id"),
-        granularityFor, default))
+      .withColumn("bucket", bucketOf(col("ts")))
       .repartition(width, PartitionCols.map(col): _*)
   }
 
@@ -157,17 +78,12 @@ object MessageStore {
     * UTC epoch-ms (None for an empty batch, which writes nothing). */
   final case class Appended(rows: Long, tsSpanMs: Option[(Long, Long)])
 
-  /** Append a message batch: [[layout]] then [[write]]. Pass a
-    * [[BucketWidthCache]] from a long-lived writer so the width guard
-    * stops re-listing bucket directories on every batch. The laid-out
+  /** Append a message batch: [[layout]] then [[write]]. The laid-out
     * batch is cached across the aggregate and the write, so its one
     * exchange runs once. */
-  def append(messages: DataFrame, path: String,
-      granularityFor: Map[String, String] = Map.empty,
-      default: String = DayBucket,
-      widthCache: Option[BucketWidthCache] = None): Appended = {
-    val laid = layout(messages, granularityFor, default).cache()
-    try write(laid, path, widthCache)()
+  def append(messages: DataFrame, path: String): Appended = {
+    val laid = layout(messages).cache()
+    try write(laid, path)()
     finally laid.unpersist()
   }
 
@@ -176,109 +92,37 @@ object MessageStore {
     * aggregate before the write: per (stream_id, stream_partition, bucket)
     * row count and ts span, collected (stream-parts × buckets —
     * micro-batch bounded) and planned without an exchange, since the
-    * layout already partitions on exactly that key. The width guard reads
-    * its (stream, day, width) keys from it; then `beforeWrite` runs — the
-    * commit delivers to live subscribers there, so fan-out waits for
-    * neither the parquet write nor the commit marker — and then the rows
-    * land. A rejected batch (width conflict)
-    * throws before `beforeWrite`; an empty batch skips both `beforeWrite`
-    * and the write and returns `Appended(0, None)`. */
-  def write(laid: DataFrame, path: String,
-      widthCache: Option[BucketWidthCache] = None)(
-      beforeWrite: => Unit = ()): Appended = {
+    * layout already partitions on exactly that key. Then `beforeWrite`
+    * runs — the commit delivers to live subscribers there, so fan-out
+    * waits for neither the parquet write nor the commit marker — and then
+    * the rows land. A row with a null `ts` has no bucket: such a batch
+    * throws `IllegalArgumentException` before `beforeWrite` and before any
+    * file lands (the ingest gate already rejects these rows; this guards a
+    * raw append). An empty batch skips both `beforeWrite` and the write and
+    * returns `Appended(0, None)`. */
+  def write(laid: DataFrame, path: String)(beforeWrite: => Unit = ()): Appended = {
     val perBucket = laid
       .groupBy(PartitionCols.map(col): _*)
       .agg(count(lit(1)), min(col("ts")), max(col("ts")))
       .collect()
     if (perBucket.isEmpty) return Appended(0L, None)
-    // a null ts has no bucket and so no width to guard (the ingest gate
-    // rejects such rows; a raw append lands them in Hive's default bucket)
-    val touched = perBucket
-      .flatMap(r => Option(r.getString(2)).map(b => (r.getString(0), b))).distinct
-    requireConsistentWidths(laid.sparkSession, touched, path, widthCache)
+    require(!perBucket.exists(_.isNullAt(2)),
+      "a message with a null ts has no bucket; the batch was not written")
     // ts is TIMESTAMP_NTZ holding UTC wall-clock: convert driver-side with
     // an explicit UTC interpretation, independent of the session zone
-    val ts = perBucket.flatMap(r => Seq(r.get(4), r.get(5))).collect {
-      case t: java.time.LocalDateTime => t.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-    }
-    val appended = Appended(perBucket.map(_.getLong(3)).sum,
-      if (ts.isEmpty) None else Some((ts.min, ts.max)))
+    val ts = perBucket.flatMap(r => Seq(r.getAs[java.time.LocalDateTime](4),
+      r.getAs[java.time.LocalDateTime](5))).map(epochMs)
+    val appended = Appended(perBucket.map(_.getLong(3)).sum, Some((ts.min, ts.max)))
     beforeWrite
     laid.write
       .partitionBy(PartitionCols: _*)
       .mode("append")
       .parquet(path)
-    widthCache.foreach(c => touched.foreach { case (s, b) =>
-      c.record(s, Map(b.take(10) -> Set(widthOf(b))))
-    })
     appended
   }
 
-  /** Width of a bucket name: day names are 10 chars, hour names 13. */
-  private def widthOf(bucket: String): String =
-    if (bucket.length == 10) DayBucket else HourBucket
-
-  /** Replay dedup is bucket-local — every read's merge window is keyed on
-    * uniqueKey + bucket, and the clean-marker fast paths skip the window
-    * entirely — so a key replayed AFTER its stream flips day↔hour would
-    * land in a different-width bucket than its original row and survive as
-    * a permanent duplicate that bucket-local compaction can never purge.
-    * Guard: a (stream, UTC day) holds exactly ONE bucket width for its
-    * lifetime; an append whose rows would put the other width onto a day
-    * that already has data is rejected before any file lands. Forward-only
-    * migration stays legal (flip a stream's width starting from a day with
-    * no data yet). `touched` is the batch's (stream, bucket) pairs, whose
-    * names carry their day and width. Cost per micro-batch: a bucket
-    * listing of just the touched streams' directories — the same metadata
-    * sweep a read performs — and with a [[BucketWidthCache]] the listing
-    * happens once per stream per query lifetime instead of per batch. */
-  private def requireConsistentWidths(spark: SparkSession,
-      touched: Array[(String, String)], path: String,
-      cache: Option[BucketWidthCache]): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val conflicts = touched.groupBy(_._1).flatMap { case (stream, buckets) =>
-      val days = buckets.map { case (_, b) => (b.take(10), widthOf(b)) }.distinct.toSeq
-      cache match {
-        // warm path: the stream's directory widths are already in memory —
-        // no filesystem access at all
-        case Some(c) if c.isListed(stream) =>
-          days.flatMap { case (d, width) =>
-            c.widthsOf(stream, d).filter(_ != width)
-              .map(w => s"$stream day $d already holds buckets of width " +
-                s"'$w' (cached listing)")
-          }
-        case _ =>
-          val streamDir = new Path(root, s"stream_id=${escapePathName(stream)}")
-          if (!fs.exists(streamDir)) {
-            cache.foreach(_.record(stream, Map.empty))
-            Nil
-          } else {
-            // bucket names present, across all partitions of the stream
-            val existing = fs.listStatus(streamDir).toSeq.filter(_.isDirectory)
-              .flatMap(part => listBuckets(fs, part.getPath)).map(_.name)
-            // the one listing feeds the cache with EVERY day's widths, so
-            // later batches touching other days of this stream stay warm
-            cache.foreach(_.record(stream,
-              existing.groupBy(_.take(10)).map { case (d, bs) =>
-                d -> bs.map(widthOf).toSet
-              }))
-            days.flatMap { case (d, width) =>
-              existing.filter(b => b.take(10) == d && widthOf(b) != width)
-                .map(b => s"$stream day $d already holds bucket '$b' of the other width")
-            }
-          }
-      }
-    }
-    if (conflicts.nonEmpty)
-      throw new IllegalStateException(
-        "bucket-width conflict: replay dedup is bucket-local, so writing a " +
-          "second width into a day that already has data would make any " +
-          "replayed key a permanent duplicate. Re-append with the day's " +
-          "original granularity (width flips apply to NEW days only). " +
-          conflicts.mkString("; "))
-  }
+  private def epochMs(t: java.time.LocalDateTime): Long =
+    t.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
 
   /** Open the store as physically written (replays included; see
     * [[openMerged]] for the upsert view), with the explicit store schema
@@ -309,19 +153,15 @@ object MessageStore {
     * the part's buckets that can hold rows in the optional ts window
     * `[fromMs, toMs]` — the reference's per-stream-part, bucket-bounded
     * queries (`Storage.ts:101-410,452-576`). The window is chosen on bucket
-    * names and is exact for any per-stream mix of day and hour buckets: a
-    * bucket is kept when its name is ≥ the UTC day of `from` (a day name
-    * sorts at or below all its hour names, so every bucket that can hold
-    * rows ≥ from survives, at the cost of at most one extra day of hour
-    * buckets) and ≤ the UTC hour of `to` (a day name is a proper prefix of
-    * its hour names, so the boundary day's bucket of either width survives
-    * while whole hour buckets past `to` drop). Rows inside the kept buckets
-    * are not filtered: the caller's ts predicates keep answers exact. */
+    * names: a bucket is kept when its day lies between the UTC days of
+    * `from` and `to`. Rows inside the kept buckets are not filtered: the
+    * caller's ts predicates keep answers exact, and the parquet row-group
+    * stats on `ts` prune inside the boundary days. */
   def openStreamPart(spark: SparkSession, path: String, streamId: String,
       partition: Int, fromMs: Option[Long] = None,
       toMs: Option[Long] = None): DataFrame = {
-    val lower = fromMs.map(bucketStr(_, DayBucket))
-    val upper = toMs.map(bucketStr(_, HourBucket))
+    val lower = fromMs.map(dayOf)
+    val upper = toMs.map(dayOf)
     scan(spark, path, partBuckets(spark, path, streamId, partition)
       .filter(b => lower.forall(b.name >= _) && upper.forall(b.name <= _)))
   }
@@ -359,6 +199,15 @@ object MessageStore {
     *    parquet footers' block row counts — no data page is read. */
   private final class Bucket(val name: String, val path: Path,
       fs: org.apache.hadoop.fs.FileSystem) {
+    /** (stream id, partition, bucket) as a read of the store returns
+      * them, the partition as text. */
+    lazy val key: (String, String, String) = {
+      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
+      val part = path.getParent
+      (unescapePathName(part.getParent.getName.stripPrefix("stream_id=")),
+        part.getName.stripPrefix("stream_partition="), name)
+    }
+
     private lazy val files: Seq[org.apache.hadoop.fs.FileStatus] =
       try fs.listStatus(path).toSeq.filter(_.isFile)
       catch { case _: java.io.IOException => Nil }
@@ -442,10 +291,10 @@ object MessageStore {
     * recording the committed file count — any later append changes the
     * count and voids the marker). So clean buckets read window-free and
     * only dirty buckets pay the merge shuffle, keyed on the uniqueness key
-    * plus `bucket` (bucket-local, like compaction; the append width guard
-    * keeps a key's replays in one bucket). The steady post-compaction state
-    * serves at plain-scan cost, the engine analog of Cassandra upserts
-    * being free after sstable compaction.
+    * plus `bucket` (bucket-local, like compaction; a bucket is a fixed
+    * function of `ts`, so a key's replays share one bucket). The steady
+    * post-compaction state serves at plain-scan cost, the engine analog of
+    * Cassandra upserts being free after sstable compaction.
     *
     * An append landing between the marker check and plan execution could
     * put a replay into a scan already planned window-free: accepted as
@@ -468,10 +317,20 @@ object MessageStore {
       .getOrElse(emptyRelation(spark))
   }
 
-  private def bucketStr(ms: Long, granularity: String): String =
-    java.time.LocalDateTime
-      .ofInstant(java.time.Instant.ofEpochMilli(ms), java.time.ZoneOffset.UTC)
-      .format(java.time.format.DateTimeFormatter.ofPattern(granularity))
+  private val DayFormat = java.time.format.DateTimeFormatter.ofPattern(DayBucket)
+  private val DayMs = 86400000L
+
+  /** The bucket name of a UTC epoch-ms instant. */
+  private def dayOf(ms: Long): String =
+    java.time.LocalDate.ofInstant(java.time.Instant.ofEpochMilli(ms),
+      java.time.ZoneOffset.UTC).format(DayFormat)
+
+  /** The UTC epoch-ms at which a bucket's day starts; None for a name that
+    * is not a day (a corrupted or foreign directory), which retention
+    * skips — never deletes, never aborts the sweep on. */
+  private def dayStartMs(bucketName: String): Option[Long] =
+    scala.util.Try(java.time.LocalDate.parse(bucketName, DayFormat)
+      .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli).toOption
 
   /** Bounded last-N over the physical layout, as a DataFrame of the
     * stored columns: [[collectLast]] with no wire shape, over local rows.
@@ -497,12 +356,12 @@ object MessageStore {
     * fewer than `limit` rows.
     *
     * Coverage reads no data and runs no job, like the reference reading its
-    * bucket table's per-bucket counts: the part's UTC day groups are walked
-    * newest-first on the driver, each adding the physical row count of its
-    * parquet footers, until the count reaches the clamped limit. The oldest
-    * group reached is never counted (there is nothing older to decide on),
-    * so a part with one day group reads no footer at all, and no file
-    * outside the covering groups is ever opened.
+    * bucket table's per-bucket counts: the part's buckets are walked
+    * newest-first by name on the driver, each adding the physical row count
+    * of its parquet footers, until the count reaches the clamped limit. The
+    * oldest bucket reached is never counted (there is nothing older to
+    * decide on), so a one-bucket part reads no footer at all, and no file
+    * outside the covering buckets is ever opened.
     *
     * The answer is at most 10k rows by the clamp, so it is collected once;
     * the widen check reads the collected length instead of running the
@@ -513,20 +372,13 @@ object MessageStore {
     import graft.operators.BrokerQueries
     val buckets = partBuckets(spark, path, streamId, partition)
     val clamped = math.min(math.max(limit, 0), BrokerQueries.MaxResendLast)
-    // coverage selection works in whole UTC days (the first 10 chars of
-    // either bucket format): when a stream's granularity changed mid-day,
-    // a day bucket and that day's hour buckets coexist and overlap in
-    // time, so name order between them is NOT newest-first — selecting a
-    // whole day at a time keeps the expansion exact for any mix (a
-    // pure-hour tail day just reads its few extra hour buckets)
-    val days = buckets.groupBy(_.name.take(10)).toSeq
-      .sortBy(_._1)(Ordering[String].reverse).map(_._2).iterator
+    val newest = buckets.sortBy(_.name)(Ordering[String].reverse).iterator
     val needed = Seq.newBuilder[Bucket]
     var covered = 0L
-    while (covered < clamped && days.hasNext) {
-      val group = days.next()
-      needed ++= group
-      if (days.hasNext) covered += group.map(_.rows).sum
+    while (covered < clamped && newest.hasNext) {
+      val bucket = newest.next()
+      needed += bucket
+      if (newest.hasNext) covered += bucket.rows
     }
     val covering = needed.result()
     if (covering.isEmpty) return Array.empty
@@ -789,9 +641,9 @@ object MessageStore {
     recovered.toSeq
   }
 
-  /** Retention enforcement: drop expired bucket directories (metadata-only,
-    * no rewrite — the Spark analog of the reference's bucket-granular
-    * delete job). Returns the dropped partition paths. */
+  /** Retention enforcement: drop expired bucket directories (no rewrite —
+    * the Spark analog of the reference's bucket-granular delete job; see
+    * [[dropExpiredBucketsPerStream]]). Returns the dropped bucket paths. */
   def dropExpiredBuckets(spark: SparkSession, path: String, cutoff: MsgRef): Seq[String] =
     dropExpiredBucketsPerStream(spark, path, _ => cutoff)
 
@@ -799,71 +651,61 @@ object MessageStore {
     * buckets expire against that stream's own cutoff (the reference reads
     * `storageDays` per stream, defaulting 365). The expiry rule stays
     * data-aware — a bucket is dropped only when its MAX(ts) is older than
-    * its stream's cutoff — and the cutoff lookup happens driver-side on
-    * the already-aggregated bucket stats (one row per bucket), so the
-    * distributed work is independent of how many streams have custom
-    * retention. */
+    * its stream's cutoff — but every row of bucket `d` has a ts in
+    * `[d, d+1)`, so the name decides every bucket except the one per
+    * stream-part whose day contains the cutoff: a day ending at or before
+    * the cutoff is expired, a day starting at or after it is not. Only
+    * those boundary buckets are read, by path, in one aggregate; no other
+    * file is opened. Returns the dropped bucket paths
+    * (`<path>/stream_id=…/stream_partition=…/bucket=…`, as written). */
   def dropExpiredBucketsPerStream(
       spark: SparkSession, path: String, cutoffFor: String => MsgRef): Seq[String] = {
-    // partition directory names are escaped by the writer (e.g. '/' in a
-    // stream id becomes %2F) — escape identically or deletes silently miss
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    val stats = open(spark, path)
-      .groupBy(col("stream_id"), col("stream_partition"), col("bucket"))
-      .agg(max(col("ts")).as("max_ts"))
-      .collect()
-    val expired = stats.filter { r =>
-      val cutoffMs = cutoffFor(r.getAs[String]("stream_id")).tsMs
-      r.getAs[java.time.LocalDateTime]("max_ts")
-        .toInstant(java.time.ZoneOffset.UTC).toEpochMilli < cutoffMs
-    }.map { r =>
-      s"$path/stream_id=${escapePathName(r.getAs[String]("stream_id"))}" +
-        s"/stream_partition=${r.getAs[Int]("stream_partition")}" +
-        s"/bucket=${escapePathName(r.getAs[String]("bucket"))}"
-    }.toSeq
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    expired.filter(p => fs.delete(new Path(p), true))
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dated = bucketDirs(fs, root).flatMap { b =>
+      dayStartMs(b.name).map(start => (b, start, cutoffFor(b.key._1).tsMs))
+    }
+    val boundary = dated.collect {
+      case (b, start, cutoff) if start < cutoff && cutoff < start + DayMs => b
+    }
+    val newestMs: Map[(String, String, String), Long] =
+      if (boundary.isEmpty) Map.empty
+      else reader(spark, path).parquet(boundary.map(_.path.toString): _*)
+        .groupBy(PartitionCols.map(col): _*)
+        .agg(max(col("ts")))
+        .collect()
+        .map(r => (r.getString(0), r.get(1).toString, r.getString(2)) ->
+          epochMs(r.getAs[java.time.LocalDateTime](3)))
+        .toMap
+    dated.collect {
+      case (b, start, cutoff)
+          if start + DayMs <= cutoff || newestMs.get(b.key).exists(_ < cutoff) => b
+    }.filter(b => fs.delete(b.path, true)).map(shown(path, _))
   }
 
   /** Age-based bucket drop — the S4 TTL analog (`USING TTL 259200`,
     * `src/storage/BatchManager.ts:12-14`): a non-storage node keeps only a
     * transient relay window, expiring data by AGE rather than per-stream
-    * retention policy. The decision is made purely from the bucket
-    * directory name (the bucket value is the hour/day truncation of the
-    * data's ts), so the sweep is pure filesystem metadata — zero reads.
-    * Late-arriving rows land in old buckets and therefore expire earlier
-    * than wall-clock TTL would — acceptable for the transient-relay use
-    * the reference puts TTL writes to. Returns dropped bucket paths. */
+    * retention policy. A bucket is dropped when its day ends at or before
+    * the cutoff, decided purely from the directory name, so the sweep is
+    * pure filesystem metadata — zero reads. Late-arriving rows land in old
+    * buckets and therefore expire earlier than wall-clock TTL would —
+    * acceptable for the transient-relay use the reference puts TTL writes
+    * to. Names that are not a day are skipped. Returns dropped bucket
+    * paths. */
   def dropAgedBuckets(
       spark: SparkSession, path: String, cutoff: MsgRef): Seq[String] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // each bucket expires against ITS OWN width, parsed from the name
-    // (day names are 10 chars, hour names 13): a bucket is deletable iff
-    // every instant it can contain is before the cutoff, i.e. its
-    // EXCLUSIVE end <= cutoff. A single-granularity name comparison is
-    // unsound in a per-stream mixed store — a day name is a PREFIX of its
-    // hour names, so "2024-01-15" < "2024-01-15-15" would delete a day
-    // bucket whose tail rows are younger than an intra-day cutoff (the
-    // hazard [[openStreamPart]]'s bucket-name window handles on the read
-    // path).
-    // total on malformed input: a right-length-but-unparseable name (a
-    // corrupted directory, a foreign file) is SKIPPED like wrong-length
-    // names are, never deletes, never aborts the sweep mid-way
-    def bucketEndMs(bucketName: String): Option[Long] = {
-      val fmt = if (bucketName.length == 13) HourBucket
-        else if (bucketName.length == 10) DayBucket
-        else return None
-      scala.util.Try {
-        val start = java.time.LocalDateTime.parse(
-          bucketName + (if (fmt == DayBucket) "-00" else ""),
-          java.time.format.DateTimeFormatter.ofPattern(HourBucket))
-        val end = if (fmt == DayBucket) start.plusDays(1) else start.plusHours(1)
-        end.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-      }.toOption
-    }
     bucketDirs(fs, root)
-      .filter(b => bucketEndMs(b.name).exists(_ <= cutoff.tsMs) && fs.delete(b.path, true))
-      .map(_.path.toString)
+      .filter(b => dayStartMs(b.name).exists(_ + DayMs <= cutoff.tsMs) && fs.delete(b.path, true))
+      .map(shown(path, _))
+  }
+
+  /** A dropped bucket's path as retention reports it: under the caller's
+    * store path, with the directory names as written. */
+  private def shown(path: String, b: Bucket): String = {
+    val part = b.path.getParent
+    s"$path/${part.getParent.getName}/${part.getName}/${b.path.getName}"
   }
 }

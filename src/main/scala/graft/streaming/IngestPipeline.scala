@@ -18,8 +18,8 @@ import graft.store.MessageStore
   * batch/bucket FSMs collapsed into the micro-batch engine (S3-S5).
   * Every stored row, batch publish or streaming, takes the same [[commit]]
   * path: one exchange (the store layout) and one aggregate over the
-  * prepared rows (inside [[MessageStore.write]]), which feeds the width
-  * guard and the commit marker; live fan-out runs before the write.
+  * prepared rows (inside [[MessageStore.write]]), which feeds the commit
+  * marker; live fan-out runs before the write.
   *
   * Design notes for scale:
   *  - NO watermark on the persist path: the reference accepts arbitrarily
@@ -44,53 +44,50 @@ object IngestPipeline {
     * [[IngestMonitors.prepared]], then [[MessageStore.layout]] (the
     * `bucket` column and the batch's ONE exchange), then intra-batch
     * [[Dedup.ingestDedup]] on the uniqueness key plus `bucket`. `bucket` is
-    * a function of `stream_id` and `ts`, so that key groups exactly like
-    * the uniqueness key alone; it also contains the layout's partition
-    * columns, so the dedup window runs inside the layout's partitions
-    * without an exchange of its own. `assigned` is the optional set of
+    * a function of `ts`, so that key groups exactly like the uniqueness key
+    * alone; it also contains the layout's partition columns, so the dedup
+    * window runs inside the layout's partitions without an exchange of its
+    * own. `assigned` is the optional set of
     * "stream_id::partition" keys this node stores (None ⇒ store
     * everything). The result carries `bucket`. */
   def prepareBatch(
       batch: DataFrame,
       nowMs: Long,
-      assigned: Option[Set[String]] = None,
-      granularityFor: Map[String, String] = Map.empty): DataFrame =
+      assigned: Option[Set[String]] = None): DataFrame =
     // NTZ literal built directly from the UTC instant — session-timezone
     // independent (a Timestamp lit + cast would shift by the session zone)
     Dedup.ingestDedup(
       MessageStore.layout(IngestMonitors.prepared(batch,
         lit(java.time.LocalDateTime.ofInstant(
           java.time.Instant.ofEpochMilli(nowMs), java.time.ZoneOffset.UTC)),
-        assigned), granularityFor),
+        assigned)),
       StreamMessage.uniqueKey :+ "bucket")
 
   /** The one commit path for every write — [[graft.GraftEngine.publish]]
     * and each streaming micro-batch ([[processBatch]]). The prepared batch
     * ([[prepareBatch]]) is cached, then [[MessageStore.write]] runs its
-    * one aggregate (which fills the cache) and the width guard, hands the
-    * batch to `onBatch` (live fan-out, in `StreamMessage.schema` columns),
-    * and writes it; `mark` runs last and sees what was written.
+    * one aggregate (which fills the cache), hands the batch to `onBatch`
+    * (live fan-out, in `StreamMessage.schema` columns), and writes it;
+    * `mark` runs last and sees what was written.
     *
     * Fan-out therefore waits for neither the parquet write nor the commit
     * marker, like the reference's network fan-out, which never waits for
-    * `Storage.store` (`WebsocketServer.ts:327-345`). A batch the guard
-    * rejects delivers nothing; a batch that fails after `onBatch` (write
-    * or `mark`) leaves no marker, so its replay delivers again:
-    * subscribers get every committed row at least once, and the store
-    * still reads each row once (merge-on-read hides a re-append). */
+    * `Storage.store` (`WebsocketServer.ts:327-345`). A batch that fails
+    * after `onBatch` (write or `mark`) leaves no marker, so its replay
+    * delivers again: subscribers get every committed row at least once,
+    * and the store still reads each row once (merge-on-read hides a
+    * re-append). */
   def commit(
       batch: DataFrame,
       batchId: Long,
       storePath: String,
       assigned: Option[Set[String]],
       nowMs: Long,
-      onBatch: (DataFrame, Long) => Unit,
-      granularityFor: Map[String, String],
-      widthCache: Option[MessageStore.BucketWidthCache])(
+      onBatch: (DataFrame, Long) => Unit)(
       mark: MessageStore.Appended => Unit = _ => ()): MessageStore.Appended = {
-    val prepared = prepareBatch(batch, nowMs, assigned, granularityFor).cache()
+    val prepared = prepareBatch(batch, nowMs, assigned).cache()
     try {
-      val appended = MessageStore.write(prepared, storePath, widthCache)(
+      val appended = MessageStore.write(prepared, storePath)(
         onBatch(prepared.drop("bucket"), batchId))
       mark(appended)
       appended
@@ -101,8 +98,7 @@ object IngestPipeline {
     * which makes replays (foreachBatch is at-least-once) idempotent — a
     * re-delivered batchId whose marker exists is skipped entirely. The
     * marker lands last, after `onBatch` and the write, so a batch that
-    * fails anywhere (e.g. the width guard) leaves none and its replay
-    * retries it.
+    * fails anywhere leaves none and its replay retries it.
     * Returns true when the batch was (newly) applied. */
   def processBatch(
       batch: DataFrame,
@@ -111,9 +107,7 @@ object IngestPipeline {
       checkpointPath: String,
       assigned: () => Option[Set[String]] = () => None,
       nowMs: Long = System.currentTimeMillis(),
-      onBatch: (DataFrame, Long) => Unit = (_, _) => (),
-      granularityFor: Map[String, String] = Map.empty,
-      widthCache: Option[MessageStore.BucketWidthCache] = None): Boolean = {
+      onBatch: (DataFrame, Long) => Unit = (_, _) => ()): Boolean = {
     val marker = new org.apache.hadoop.fs.Path(
       s"$checkpointPath/graft-committed/$batchId")
     val fs = marker.getFileSystem(
@@ -123,8 +117,7 @@ object IngestPipeline {
       // R7: the assignment supplier is re-evaluated at each batch boundary
       // (DynamicAssignment.get) — assignment changes apply to the next
       // micro-batch without restarting the query (StorageConfig.ts:96-149)
-      commit(batch, batchId, storePath, assigned(), nowMs, onBatch,
-          granularityFor, widthCache) { appended =>
+      commit(batch, batchId, storePath, assigned(), nowMs, onBatch) { appended =>
         // the marker doubles as the batch-statistics record (A10): rows,
         // commit time, and the batch's ts span (the commit time for an
         // empty batch) — IngestStats aggregates these into the
@@ -168,32 +161,18 @@ object IngestPipeline {
       assigned: () => Option[Set[String]] = () => None,
       triggerMs: Long = 1000L,
       onBatch: (DataFrame, Long) => Unit = (_, _) => (),
-      granularityFor: Map[String, String] = Map.empty,
       autoCompactEvery: Int = 0,
-      maxFilesPerBucket: Int = 4,
-      widthCache: Option[MessageStore.BucketWidthCache] = None): StreamingQuery = {
-    // width memory: the guard lists each stream's buckets once, then
-    // steady ingest checks widths in memory (zero FS listing per batch).
-    // Default scope is the query, so a restart re-learns from the
-    // filesystem; compaction preserves bucket names, so the in-query
-    // autoCompact below never needs to invalidate it. A caller that runs
-    // RETENTION beside a live ingest (GraftEngine) passes its own
-    // longer-lived cache instead and invalidates dropped streams — a
-    // retention-emptied day makes a width flip newly legal, which a stale
-    // entry would conservatively reject.
-    val cache = widthCache.getOrElse(new MessageStore.BucketWidthCache)
+      maxFilesPerBucket: Int = 4): StreamingQuery =
     source.writeStream
       .option("checkpointLocation", checkpointPath)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val applied = processBatch(batch, batchId, storePath, checkpointPath,
-          assigned, onBatch = onBatch, granularityFor = granularityFor,
-          widthCache = Some(cache))
+          assigned, onBatch = onBatch)
         if (applied && autoCompactEvery > 0 &&
             batchId % autoCompactEvery == (autoCompactEvery - 1).toLong)
           MessageStore.autoCompact(batch.sparkSession, storePath, maxFilesPerBucket)
         ()
       }
       .start()
-  }
 }

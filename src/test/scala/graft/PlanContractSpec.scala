@@ -405,7 +405,7 @@ class PlanContractSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       graft.streaming.IngestPipeline.commit(batch, 0L, path, None, 10000L,
-        reg.dispatch, Map.empty, None)()
+        reg.dispatch)()
       org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     object H extends AdaptiveSparkPlanHelper

@@ -23,6 +23,11 @@ class ResendSpec extends SparkSpec {
       Seq(Resend.NoResend()))
   }
 
+  test("subscribe rejects an unknown format name") {
+    val reg = new SubscriptionRegistry()
+    intercept[IllegalArgumentException](reg.subscribe("c", "s", 0, format = "bogus"))
+  }
+
   test("fan-out: subscribers receive only their stream-part (local-propagation)") {
     val reg = new SubscriptionRegistry()
     val a = reg.subscribe("client-a", "s", 0)

@@ -81,7 +81,7 @@ class StoreStreamingSpec extends SparkSpec {
     assert(r2.count() == 60)
   }
 
-  test("retention drops expired bucket directories, metadata-only") {
+  test("retention drops expired bucket directories, deciding by name") {
     val path = tmpDir("graft-retention")
     MessageStore.append(streamDataOf(
       msg("s", 0, 1600000000000L, 0),   // old bucket — expired
@@ -90,6 +90,32 @@ class StoreStreamingSpec extends SparkSpec {
     assert(dropped.size == 1 && dropped.head.contains("bucket=2020-09-13"))
     val left = MessageStore.open(spark, path)
     assert(keysOf(left) == Seq((1700000000000L, 1, "publisher", "1")))
+  }
+
+  test("retention reads only the boundary day: a junk file in a long-expired " +
+      "bucket does not stop deleteExpired") {
+    val path = tmpDir("graft-retention-boundary")
+    val engine = new GraftEngine(spark, path)
+    val dayMs = 86400000L
+    val now = 1700000000000L // 2023-11-14T22:13:20Z; 1-day cutoff 2023-11-13T22:13:20Z
+    val hourMs = 3600000L
+    MessageStore.append(streamDataOf(
+      msg("s", 0, now - 400 * dayMs, 0),        // 2022-10-10: expired by name
+      msg("s", 0, now - dayMs - hourMs, 1),     // 2023-11-13T21:13, before the cutoff
+      msg("t", 0, now - dayMs - hourMs, 0),
+      msg("t", 0, now - dayMs + hourMs, 1),     // 2023-11-13T23:13, after it
+      msg("s", 0, now, 2)), path)               // 2023-11-14: kept by name
+    // a file no parquet reader can open, in the long-expired bucket: the
+    // name alone decides that bucket, so nothing opens the file
+    val expired = new java.io.File(s"$path/stream_id=s/stream_partition=0/bucket=2022-10-10")
+    Files.writeString(new java.io.File(expired, "junk.parquet").toPath, "not parquet")
+    // the boundary day 2023-11-13 expires for s (its newest row is older
+    // than the cutoff) and stays for t
+    assert(engine.deleteExpired(retentionDays = 1, nowMs = now).toSet == Set(
+      s"$path/stream_id=s/stream_partition=0/bucket=2022-10-10",
+      s"$path/stream_id=s/stream_partition=0/bucket=2023-11-13"))
+    assert(keysOf(MessageStore.open(spark, path)).map(_._1).sorted ==
+      Seq(now - dayMs - hourMs, now - dayMs + hourMs, now))
   }
 
   test("retention handles escaped partition values (stream id with '/')") {
@@ -255,15 +281,14 @@ class StoreStreamingSpec extends SparkSpec {
     assert(!new java.io.File(partDir, ".bucket=2023-11-14.trash").exists())
   }
 
-  test("dropAgedBuckets: a day bucket survives an intra-day hour cutoff (mixed-width store)") {
-    val path = tmpDir("graft-ttl-mixed")
-    // day-bucketed stream with rows at 2023-11-14T00:00 and T15:00
+  test("dropAgedBuckets: a day bucket survives an intra-day cutoff") {
+    val path = tmpDir("graft-ttl-intraday")
+    // rows at 2023-11-14T00:00 and T15:00
     MessageStore.append(streamDataOf(
       msg("s", 0, 1699920000000L, 0),     // 2023-11-14T00:00Z
       msg("s", 0, 1699974000000L, 1)), path) // 2023-11-14T15:00Z
-    // hour-granularity cutoff at 2023-11-14T10:00: the day bucket's name
-    // "2023-11-14" sorts BELOW "2023-11-14-10", but its tail row (15:00)
-    // is younger than the cutoff — the bucket must survive
+    // cutoff at 2023-11-14T10:00: the day's tail row (15:00) is younger
+    // than the cutoff — the bucket must survive
     val dropped = MessageStore.dropAgedBuckets(spark, path,
       MsgRef(1699956000000L, 0))
     assert(dropped.isEmpty)
@@ -489,7 +514,7 @@ class StoreStreamingSpec extends SparkSpec {
     // from's read: the buckets at or after from's UTC day
     assert(bucketsRead(read(Some(base + dayMs + 1000L), None)) ==
       Set(day("15"), day("16")))
-    // range's read: the buckets between from's day and to's hour
+    // range's read: the buckets between from's day and to's day
     assert(bucketsRead(read(Some(base + dayMs), Some(base + dayMs + 1000L))) ==
       Set(day("15")))
     // an unknown stream-part lists nothing and reads nothing
@@ -497,135 +522,33 @@ class StoreStreamingSpec extends SparkSpec {
     assert(none.inputFiles.isEmpty && none.count() == 0)
   }
 
-  test("per-stream bucket granularity: hot stream hour-bucketed, pruning stays exact") {
-    val path = tmpDir("graft-granularity")
-    val base = 1700000000000L // 2023-11-14 22:13:20 UTC
-    val hourMs = 3600000L
-    // "hot" bucketed by hour, "cold" by day (default), same store
-    MessageStore.append(streamDataOf(
-      msg("hot", 0, base - 2 * hourMs, 0),   // 20:13 → bucket 2023-11-14-20
-      msg("hot", 0, base, 1),                // 22:13 → bucket 2023-11-14-22
-      msg("cold", 0, base - 2 * hourMs, 0),
-      msg("cold", 0, base, 1)),
-      path, Map("hot" -> MessageStore.HourBucket))
-    assert(new java.io.File(s"$path/stream_id=hot/stream_partition=0").list().sorted
-      .toSeq == Seq("bucket=2023-11-14-20", "bucket=2023-11-14-22"))
-    assert(new java.io.File(s"$path/stream_id=cold/stream_partition=0").list()
-      .toSeq == Seq("bucket=2023-11-14"))
-    // mixed-safe bucket window from base-1h: the lower bound floors to the
-    // UTC day, so the boundary day's buckets of either width survive (hour
-    // bucket 20 is the one extra lower-edge read), answers exact
-    def buckets(df: org.apache.spark.sql.DataFrame) =
-      bucketsRead(df).map(b => b.substring(b.indexOf("bucket=")))
-    val hotFrom = MessageStore.openStreamPart(spark, path, "hot", 0, Some(base - hourMs))
-    assert(buckets(hotFrom) == Set("bucket=2023-11-14-20", "bucket=2023-11-14-22"))
-    assert(keysOf(BrokerQueries.requestFrom(hotFrom, "hot", 0,
-      MsgRef(base - hourMs, 0))) == Seq((base, 1, "publisher", "1")))
-    val coldFrom = MessageStore.openStreamPart(spark, path, "cold", 0, Some(base - hourMs))
-    assert(buckets(coldFrom) == Set("bucket=2023-11-14"))
-    assert(keysOf(BrokerQueries.requestFrom(coldFrom, "cold", 0,
-      MsgRef(base - hourMs, 0))) == Seq((base, 1, "publisher", "1")))
-    // an upper bound drops whole hour buckets past `to` but keeps the
-    // boundary day bucket
-    val hotTo =
-      MessageStore.openStreamPart(spark, path, "hot", 0, None, Some(base - hourMs))
-    assert(buckets(hotTo) == Set("bucket=2023-11-14-20"))
-    assert(keysOf(BrokerQueries.requestRange(hotTo, "hot", 0,
-      MsgRef(0L, 0), MsgRef(base - hourMs, 99))) ==
-      Seq((base - 2 * hourMs, 0, "publisher", "1")))
-    val coldTo =
-      MessageStore.openStreamPart(spark, path, "cold", 0, None, Some(base - hourMs))
-    assert(buckets(coldTo) == Set("bucket=2023-11-14"))
-    assert(keysOf(BrokerQueries.requestRange(coldTo, "cold", 0,
-      MsgRef(0L, 0), MsgRef(base - hourMs, 99))) ==
-      Seq((base - 2 * hourMs, 0, "publisher", "1")))
-    // bounded last-N selects whole UTC days, so mixed widths stay exact
-    assert(keysOf(MessageStore.requestLastBounded(spark, path, "hot", 0, 1)) ==
-      Seq((base, 1, "publisher", "1")))
-    assert(keysOf(MessageStore.requestLastBounded(spark, path, "hot", 0, 2)).length == 2)
+  test("append rejects a null ts before any file lands") {
+    val path = tmpDir("graft-null-ts")
+    val rows = streamDataOf(msg("s", 0, 1600000000000L, 0),
+        msg("s", 0, 1700000000000L, 1), msg("s", 0, 1700000000000L, 2))
+      .withColumn("ts", when(col("sequence_no") =!= 2, col("ts")))
+    intercept[IllegalArgumentException](MessageStore.append(rows, path))
+    assert(!Files.walk(java.nio.file.Paths.get(path)).toArray
+      .exists(_.toString.endsWith(".parquet")))
   }
 
-  test("granularity flip guard: second width on an occupied day rejected, new day allowed") {
-    val path = tmpDir("graft-width-guard")
-    val base = 1700000000000L // 2023-11-14 22:13:20 UTC
-    val dayMs = 86400000L
-    MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path, Map.empty)
-    // replay/append of the same day after a day→hour flip: would create a
-    // second-width bucket whose replays the bucket-local merge window can
-    // never collapse — rejected before any file lands
-    val e = intercept[IllegalStateException] {
-      MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path,
-        Map("s" -> MessageStore.HourBucket))
-    }
-    assert(e.getMessage.contains("bucket-width conflict"), e.getMessage)
-    assert(new java.io.File(s"$path/stream_id=s/stream_partition=0").list()
-      .toSeq == Seq("bucket=2023-11-14"))
-    // forward-only migration: hour width on a fresh day is legal, and the
-    // same-day original width still appends (replays keep working)
-    MessageStore.append(streamDataOf(msg("s", 0, base + dayMs, 1)), path,
-      Map("s" -> MessageStore.HourBucket))
-    MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path, Map.empty)
-    assert(new java.io.File(s"$path/stream_id=s/stream_partition=0").list().sorted
-      .toSeq == Seq("bucket=2023-11-14", "bucket=2023-11-15-22"))
-    // and the day bucket's replay collapsed on read as before
-    assert(keysOf(MessageStore.openMerged(spark, path)).length == 2)
-  }
-
-  test("width cache: guard answers from memory after warmup, invalidate re-learns") {
-    val path = tmpDir("graft-width-cache")
-    val base = 1700000000000L // 2023-11-14 22:13:20 UTC
-    val cache = new MessageStore.BucketWidthCache
-    // warmup: first append lists (fresh store — nothing there) and records
-    // the written day's width into the cache
-    MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path,
-      Map.empty, widthCache = Some(cache))
-    // width flip on the occupied day still rejected, now from the cache
-    val e = intercept[IllegalStateException] {
-      MessageStore.append(streamDataOf(msg("s", 0, base, 1)), path,
-        Map("s" -> MessageStore.HourBucket), widthCache = Some(cache))
-    }
-    assert(e.getMessage.contains("cached listing"),
-      s"post-warmup conflict must come from the cache, not a re-listing: ${e.getMessage}")
-    // PROOF the steady path does zero FS listing: wipe the stream's
-    // buckets behind the cache's back — the filesystem now permits a width
-    // flip, but the cached (stream, day) entry still rejects it, so the
-    // guard cannot have consulted the filesystem
-    val partDir = new java.io.File(s"$path/stream_id=s/stream_partition=0")
-    partDir.listFiles().foreach { d =>
-      d.listFiles().foreach(_.delete()); d.delete()
-    }
-    val e2 = intercept[IllegalStateException] {
-      MessageStore.append(streamDataOf(msg("s", 0, base, 1)), path,
-        Map("s" -> MessageStore.HourBucket), widthCache = Some(cache))
-    }
-    assert(e2.getMessage.contains("cached listing"), e2.getMessage)
-    // retention contract: invalidate the stream → the guard re-lists, sees
-    // the empty directory, and the flip becomes legal
-    cache.invalidate("s")
-    MessageStore.append(streamDataOf(msg("s", 0, base, 1)), path,
-      Map("s" -> MessageStore.HourBucket), widthCache = Some(cache))
-    assert(new java.io.File(s"$path/stream_id=s/stream_partition=0").list()
-      .toSeq == Seq("bucket=2023-11-14-22"))
-    // and the re-learned entry keeps guarding: day width now conflicts
-    val e3 = intercept[IllegalStateException] {
-      MessageStore.append(streamDataOf(msg("s", 0, base, 2)), path,
-        Map.empty, widthCache = Some(cache))
-    }
-    assert(e3.getMessage.contains("cached listing"), e3.getMessage)
-  }
-
-  test("plain append is width-guarded too: second width on an occupied day rejected") {
-    val path = tmpDir("graft-width-append")
-    val base = 1700000000000L // 2023-11-14 UTC
-    MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path)
-    val e = intercept[IllegalStateException] {
-      MessageStore.append(streamDataOf(msg("s", 0, base, 1)), path,
-        default = MessageStore.HourBucket)
-    }
-    assert(e.getMessage.contains("bucket-width conflict"), e.getMessage)
-    intercept[IllegalArgumentException] {
-      MessageStore.append(streamDataOf(msg("s", 0, base, 1)), path, default = "yyyy-MM")
-    }
+  test("a row's bucket depends only on its ts: UTC days under a non-UTC " +
+      "session zone, and a replay lands in its original's bucket") {
+    val path = tmpDir("graft-bucket-ts")
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try {
+      val lastOfDay = msg("s", 0, 1699919999999L, 0) // 2023-11-13T23:59:59.999Z
+      val firstOfDay = msg("s", 0, 1699920000000L, 1) // 2023-11-14T00:00:00.000Z
+      MessageStore.append(streamDataOf(lastOfDay, firstOfDay), path)
+      MessageStore.append(streamDataOf(lastOfDay), path) // replay
+      val partDir = new java.io.File(s"$path/stream_id=s/stream_partition=0")
+      def files(bucket: String) = new java.io.File(partDir, bucket).listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(partDir.list().sorted.toSeq == Seq("bucket=2023-11-13", "bucket=2023-11-14"))
+      assert(files("bucket=2023-11-13") == 2 && files("bucket=2023-11-14") == 1)
+      assert(MessageStore.openMerged(spark, path).count() == 2)
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
   }
 
   test("processBatch replay guard: same batchId appends exactly once") {
@@ -642,21 +565,6 @@ class StoreStreamingSpec extends SparkSpec {
     assert(graft.streaming.IngestPipeline.processBatch(
       streamDataOf(msg("s", 0, 3000L, 2)), 8L, path, ckpt, nowMs = 10000L))
     assert(MessageStore.open(spark, path).count() == 3)
-    // a batch the width guard rejects throws before any data file or
-    // marker lands, so its replay (same batch id) is retried, not skipped
-    def dataFiles = Files.walk(java.nio.file.Paths.get(path)).toArray
-      .count(_.toString.endsWith(".parquet"))
-    val filesBefore = dataFiles
-    val late = streamDataOf(msg("s", 0, 4000L, 3))
-    intercept[IllegalStateException] {
-      graft.streaming.IngestPipeline.processBatch(late, 9L, path, ckpt,
-        nowMs = 10000L, granularityFor = Map("s" -> MessageStore.HourBucket))
-    }
-    assert(!new java.io.File(s"$ckpt/graft-committed/9").exists())
-    assert(dataFiles == filesBefore)
-    assert(graft.streaming.IngestPipeline.processBatch(
-      late, 9L, path, ckpt, nowMs = 10000L))
-    assert(MessageStore.open(spark, path).count() == 4)
   }
 
   test("processBatch: an all-rejected batch commits a rows=0 marker at nowMs " +
@@ -774,22 +682,6 @@ class StoreStreamingSpec extends SparkSpec {
     assert(sub.queue.size() == 4)
   }
 
-  test("commit: a batch the width guard rejects delivers nothing") {
-    val path = tmpDir("graft-guard-deliver")
-    val ckpt = tmpDir("graft-guard-deliver-ckpt")
-    val base = 1700000000000L
-    MessageStore.append(streamDataOf(msg("s", 0, base, 0)), path)
-    val reg = new graft.serve.SubscriptionRegistry()
-    val sub = reg.subscribe("c", "s", 0)
-    intercept[IllegalStateException] {
-      IngestPipeline.processBatch(streamDataOf(msg("s", 0, base + 1000L, 1)), 0L,
-        path, ckpt, nowMs = base, onBatch = reg.dispatch,
-        granularityFor = Map("s" -> MessageStore.HourBucket))
-    }
-    assert(sub.queue.isEmpty)
-    assert(MessageStore.open(spark, path).count() == 1)
-  }
-
   test("compactStreamPart merges per-batch small files, preserving rows") {
     val path = tmpDir("graft-compact")
     // three appends -> three files in the same day bucket
@@ -862,30 +754,6 @@ class StoreStreamingSpec extends SparkSpec {
     assert(stored.head.getAs[String]("stream_id") == "s")
     assert(stored.head.getAs[Int]("sequence_no") == 0)
     assert(seen.get() == 1)
-  }
-
-  test("retention invalidates the engine width cache: emptied day accepts a width flip") {
-    val path = tmpDir("graft-widthflip")
-    val now = 1710000000000L
-    // pre-existing store written under an older day-width config
-    MessageStore.append(streamDataOf(msg("s", 0, 1700000000000L, 0)), path)
-    // engine reconfigured to hour buckets for "s": a same-day append is
-    // rejected (the day already holds day-width data) and the failed
-    // attempt warms the engine's width cache with the directory listing
-    val engine = new GraftEngine(spark, path,
-      granularityFor = Map("s" -> MessageStore.HourBucket))
-    val ex = intercept[IllegalStateException] {
-      engine.publish(streamDataOf(msg("s", 0, 1700003600000L, 1)), now)
-    }
-    assert(ex.getMessage.contains("bucket-width conflict"))
-    // retention empties the day, making the flip newly legal; before the
-    // invalidation hook the stale cached {day -> day-width} entry kept
-    // rejecting this from memory even though the filesystem allows it
-    assert(engine.deleteExpired(retentionDays = 0, nowMs = now).nonEmpty)
-    assert(engine.publish(streamDataOf(msg("s", 0, 1700003600000L, 1)), now) == 1L)
-    val dirs = new java.io.File(s"$path/stream_id=s/stream_partition=0")
-      .list().filter(_.startsWith("bucket=")).toSeq
-    assert(dirs == Seq("bucket=2023-11-14-23"), dirs.toString)
   }
 
   test("ingest fan-out: drift + vocab monitors consume the validated stream " +
