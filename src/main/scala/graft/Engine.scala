@@ -20,7 +20,9 @@ import graft.streaming.{DynamicAssignment, IngestPipeline}
   *    format (§3.1-3.2), `metadata` the count/bytes/first/last endpoints
   *    (`Storage.ts:452-576`); each reads only its own stream-part's
   *    buckets (`last` via [[MessageStore.collectLast]], the others
-  *    via [[MessageStore.openStreamPart]]), with one merge-on-read rule;
+  *    via [[MessageStore.openStreamPart]]), with one merge-on-read rule.
+  *    A stream-part read is one task, merged in its own partition: each
+  *    request is one Spark job with no exchange;
   *  - live path: `subscribe` receives each ingested micro-batch (R1);
   *  - ops: `deleteExpired` enforces retention by bucket drop
   *    (`DeleteExpiredCmd.ts`).
@@ -125,10 +127,9 @@ final class GraftEngine(
   /** Maintenance: merge per-batch small files of a stream-part's buckets
     * (the reference's bucket-rolling analog). Crashed compactions from an
     * earlier run are recovered first. Returns buckets compacted. */
-  def compact(streamId: String, partition: Int): Int = {
-    MessageStore.recoverCompaction(spark, storePath)
+  def compact(streamId: String, partition: Int): Int =
+    // recovery of crashed earlier compactions happens inside compactStreamPart
     MessageStore.compactStreamPart(spark, storePath, streamId, partition)
-  }
 
   /** Policy-driven maintenance across the whole store: compact every
     * bucket whose per-batch file count reached `maxFilesPerBucket` (the

@@ -19,8 +19,12 @@ import graft.operators.BrokerQueries.MsgRef
   *  - delivery of a result plan is pull-based over `toLocalIterator` —
   *    one partition of result rows in driver memory at a time, the
   *    engine-side analog of the reference's pause/resume backpressure (R6,
-  *    `Connection.ts:70-80`); the engine's bounded `last` instead hands
-  *    over its collected answer, at most 10k formatted rows;
+  *    `Connection.ts:70-80`). A stream-part read is one task, merged in its
+  *    own partition ([[graft.store.MessageStore.openStreamPart]]), so the
+  *    engine's `from`/`range` answer is built by one task and pulled as
+  *    that one partition: the driver holds one formatted answer at a time,
+  *    as the engine's bounded `last` holds its collected answer of at most
+  *    10k formatted rows;
   *  - live fan-out (R1) routes each ingested micro-batch to the
   *    subscriptions of its stream-part (`WebsocketServer.ts:327-345`);
   *    resend-while-live = envelope first, then the live queue (R5).

@@ -23,7 +23,9 @@ import graft.operators.BrokerQueries.MsgRef
   * Every serving read ([[collectLast]], [[openStreamPart]]) lists
   * one stream-part directory and scans only the buckets it selects; the
   * merge-on-read decision for those buckets is made in one place (the
-  * private `scan`). At 100 TB: a request's I/O is bounded by its own
+  * private `scan`). A stream-part read is one task, merged in its own
+  * partition: it plans no exchange, so a resend or metadata request runs
+  * one Spark job. At 100 TB: a request's I/O is bounded by its own
   * stream-part and window, never the store; per-bucket file counts stay
   * bounded by the ingest micro-batch cadence (one file per bucket per
   * batch per writer task);
@@ -146,7 +148,8 @@ object MessageStore {
   def openMerged(spark: SparkSession, path: String): DataFrame = {
     val root = new Path(path)
     scan(spark, path,
-      bucketDirs(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root))
+      bucketDirs(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root),
+      onePartition = false)
   }
 
   /** One stream-part's upsert view (see [[openMerged]]), read from only
@@ -156,14 +159,17 @@ object MessageStore {
     * names: a bucket is kept when its day lies between the UTC days of
     * `from` and `to`. Rows inside the kept buckets are not filtered: the
     * caller's ts predicates keep answers exact, and the parquet row-group
-    * stats on `ts` prune inside the boundary days. */
+    * stats on `ts` prune inside the boundary days. The view is one
+    * partition (see `scan`): a filter, ordering or aggregate over it runs
+    * as one task with no exchange. */
   def openStreamPart(spark: SparkSession, path: String, streamId: String,
       partition: Int, fromMs: Option[Long] = None,
       toMs: Option[Long] = None): DataFrame = {
     val lower = fromMs.map(dayOf)
     val upper = toMs.map(dayOf)
     scan(spark, path, partBuckets(spark, path, streamId, partition)
-      .filter(b => lower.forall(b.name >= _) && upper.forall(b.name <= _)))
+      .filter(b => lower.forall(b.name >= _) && upper.forall(b.name <= _)),
+      onePartition = true)
   }
 
   /** Marker file a committed compaction stamps into its bucket directory:
@@ -290,7 +296,7 @@ object MessageStore {
     * compaction ([[compactBucket]] purges them and stamps a `_clean` marker
     * recording the committed file count — any later append changes the
     * count and voids the marker). So clean buckets read window-free and
-    * only dirty buckets pay the merge shuffle, keyed on the uniqueness key
+    * only dirty buckets pay the merge window, keyed on the uniqueness key
     * plus `bucket` (bucket-local, like compaction; a bucket is a fixed
     * function of `ts`, so a key's replays share one bucket). The steady
     * post-compaction state serves at plain-scan cost, the engine analog of
@@ -302,18 +308,32 @@ object MessageStore {
     * the append could equally have run a moment earlier and missed the row
     * entirely, and the duplicate is gone on the next read (the marker is
     * void from then on). Columns in `StreamMessage.schema` order; the empty
-    * relation for no buckets. */
-  private def scan(spark: SparkSession, path: String,
-      buckets: Seq[Bucket]): DataFrame = {
+    * relation for no buckets.
+    *
+    * `onePartition` is the stream-part read's shape: the dirty rows are
+    * narrowed (`coalesce(1)`, no shuffle) before the merge window and the
+    * merged union after it, so the whole read is ONE partition. One
+    * partition satisfies every distribution a serving read asks for — the
+    * window's clustering, `requestLast`'s top-K, the global ascending sort
+    * of `requestFrom`/`requestRange` and `metadata`'s aggregate — so none
+    * plans an exchange, AQE has no stage to re-plan, and the request is one
+    * job of one task. The price is that one part's read no longer spreads
+    * over cores: a `from` over a long window is built by one task (and
+    * pulled as one partition, see [[graft.serve.Resend]]). A stream-part
+    * read is bounded by one part's selected buckets; the corpus-sized
+    * [[openMerged]] keeps the hash-partitioned merge. */
+  private def scan(spark: SparkSession, path: String, buckets: Seq[Bucket],
+      onePartition: Boolean): DataFrame = {
     def read(bs: Seq[Bucket]) = reader(spark, path).parquet(bs.map(_.path.toString): _*)
+    def narrow(df: DataFrame) = if (onePartition) df.coalesce(1) else df
     val (clean, dirty) = buckets.partition(_.clean)
     val parts =
       (if (clean.isEmpty) Nil else Seq(read(clean))) ++
         (if (dirty.isEmpty) Nil
-         else Seq(graft.dedup.Dedup.ingestDedup(read(dirty),
+         else Seq(graft.dedup.Dedup.ingestDedup(narrow(read(dirty)),
            graft.model.StreamMessage.uniqueKey :+ "bucket")))
     parts.reduceOption(_ unionByName _)
-      .map(_.select(graft.model.StreamMessage.schema.fieldNames.map(col(_)): _*))
+      .map(u => narrow(u.select(graft.model.StreamMessage.schema.fieldNames.map(col(_)): _*)))
       .getOrElse(emptyRelation(spark))
   }
 
@@ -383,7 +403,8 @@ object MessageStore {
     val covering = needed.result()
     if (covering.isEmpty) return Array.empty
     def lastOver(bs: Seq[Bucket]): Array[Row] =
-      shape(BrokerQueries.requestLast(scan(spark, path, bs), streamId, partition, limit))
+      shape(BrokerQueries.requestLast(scan(spark, path, bs, onePartition = true),
+        streamId, partition, limit))
         .collect()
     val res = lastOver(covering)
     // footer counts are physical and over-count replayed rows, so the

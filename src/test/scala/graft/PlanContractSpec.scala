@@ -379,6 +379,58 @@ class PlanContractSpec extends SparkSpec {
     }
   }
 
+  test("stream-part reads plan no exchange; the whole-store merge stays hash-partitioned") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.operators.BrokerQueries
+    import graft.operators.BrokerQueries.MsgRef
+    import graft.store.MessageStore
+    object H extends AdaptiveSparkPlanHelper
+    def exchanges(p: SparkPlan) = H.collect(p) { case e: Exchange => e }
+    val path = java.nio.file.Files.createTempDirectory("graft_plan_part").toString
+    val fsRoot = new org.apache.hadoop.fs.Path(path)
+    try {
+      val dayMs = 86400000L
+      val base = 1700000000000L
+      val day1 = (0 until 4).map(i => msg("s", 0, base + i * 1000L, i))
+      val day2 = (4 until 8).map(i => msg("s", 0, base + dayMs + i * 1000L, i))
+      // one clean bucket (compacted) and one dirty bucket holding a replay,
+      // so the read is the clean scan unioned with the merge window
+      MessageStore.append(streamDataOf(day1.take(2): _*), path)
+      MessageStore.append(streamDataOf(day1.drop(2): _*), path)
+      assert(MessageStore.compactStreamPart(spark, path, "s", 0) == 1)
+      MessageStore.append(streamDataOf(day2: _*), path)
+      MessageStore.append(streamDataOf(day2.head), path)
+      val part = MessageStore.openStreamPart(spark, path, "s", 0)
+      val from = MsgRef(base + 2000L, 0)
+      val reads = Map(
+        "last" -> BrokerQueries.requestLast(part, "s", 0, 5),
+        "from" -> BrokerQueries.requestFrom(part, "s", 0, from),
+        "range" -> BrokerQueries.requestRange(part, "s", 0, from,
+          MsgRef(base + dayMs + 5000L, 0)),
+        "metadata" -> BrokerQueries.metadata(part))
+      reads.foreach { case (name, df) =>
+        val plan = df.queryExecution.executedPlan
+        assert(H.collect(plan) { case w: WindowExec => w }.nonEmpty,
+          s"$name lost the merge window:\n$plan")
+        assert(exchanges(plan).isEmpty, s"$name plans an exchange:\n$plan")
+      }
+      // the corpus-sized view keeps its keyed exchange under the window
+      val merged = MessageStore.openMerged(spark, path).queryExecution.executedPlan
+      val windows = H.collect(merged) { case w: WindowExec => w }
+      assert(windows.nonEmpty, merged.toString)
+      windows.foreach(w => assert(w.outputPartitioning.isInstanceOf[HashPartitioning],
+        s"openMerged's dedup window is not hash-partitioned:\n$merged"))
+      assert(exchanges(merged).nonEmpty, merged.toString)
+    } finally {
+      fsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(fsRoot, true)
+    }
+  }
+
   test("committed batch: one exchange between source and writer, none in the aggregate") {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

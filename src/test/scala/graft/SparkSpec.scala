@@ -36,6 +36,30 @@ trait SparkSpec extends AnyFunSuite {
         r.getInt(1), r.getString(2), r.getString(3)))
       .toSeq
   }
+
+  /** The Spark jobs `body` starts, counted by a listener on a local
+    * property only this call sets. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.op") == tag))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.op", tag)
+    try {
+      body
+      org.apache.spark.ListenerBusAccess.drain(sc)
+      jobs.get()
+    } finally {
+      sc.setLocalProperty("graft.test.op", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 object SparkSpec {

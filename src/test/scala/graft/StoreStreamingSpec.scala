@@ -582,30 +582,6 @@ class StoreStreamingSpec extends SparkSpec {
     assert(new java.io.File(path).list().isEmpty)
   }
 
-  /** The Spark jobs `body` starts, counted by a listener on a local
-    * property only this call sets. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.test.op") == tag))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.op", tag)
-    try {
-      body
-      org.apache.spark.ListenerBusAccess.drain(sc)
-      jobs.get()
-    } finally {
-      sc.setLocalProperty("graft.test.op", null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("commit: a batch with one subscription runs at most five Spark jobs") {
     val path = tmpDir("graft-jobs")
     val ckpt = tmpDir("graft-jobs-ckpt")
@@ -625,8 +601,8 @@ class StoreStreamingSpec extends SparkSpec {
     assert(sub.queue.size() == 1 + 4) // seq 0, 6, 12, 18 of the counted batch
   }
 
-  test("engine.last runs one query: at most 2 jobs on a never-compacted " +
-      "part, 1 on a compacted one") {
+  test("engine.last runs one query: 1 job on a never-compacted part and " +
+      "1 on a compacted one") {
     val path = tmpDir("graft-last-jobs")
     val engine = new GraftEngine(spark, path)
     val dayMs = 86400000L
@@ -644,11 +620,79 @@ class StoreStreamingSpec extends SparkSpec {
     var served = Seq.empty[Int]
     val dirtyJobs = jobsOf { served = lastSeqs() }
     assert(served == (15 until 20))
-    assert(dirtyJobs <= 2, s"$dirtyJobs jobs")
+    assert(dirtyJobs == 1, s"$dirtyJobs jobs")
     assert(engine.compact("s", 0) == 2)
     val cleanJobs = jobsOf { served = lastSeqs() }
     assert(served == (15 until 20))
     assert(cleanJobs == 1, s"$cleanJobs jobs")
+  }
+
+  test("engine.from, range and metadata each run one job on a never-compacted " +
+      "two-day part with replays, and answer like openMerged") {
+    val path = tmpDir("graft-window-jobs")
+    val engine = new GraftEngine(spark, path)
+    val dayMs = 86400000L
+    val base = 1700000000000L // 2023-11-14; seq 10-19 land on 2023-11-15
+    val msgs = (0 until 20).map(i =>
+      msg("s", 0, base + (i / 10) * dayMs + (i % 10) * 1000L, i))
+    MessageStore.append(streamDataOf(msgs.filter(_.sequence_no % 2 == 0): _*), path)
+    MessageStore.append(streamDataOf(msgs.filter(_.sequence_no % 2 == 1): _*), path)
+    // a later batch replays rows of both days beside a neighbouring part
+    MessageStore.append(streamDataOf(Seq(4, 9, 12, 17).map(msgs(_)) :+
+      msg("s", 1, base, 0): _*), path)
+    val merged = MessageStore.openMerged(spark, path)
+    def formatted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      graft.serve.Formats.format(df, "protocol").collect().map(_.getString(0)).toSeq
+    def unicasts(frames: Iterator[graft.serve.Resend.Frame]): Seq[String] =
+      frames.collect { case graft.serve.Resend.Unicast(m) => m }.toSeq
+    def seqsOf(wire: Seq[String]): Seq[Int] = wire.map(_.split(',')(4).toInt)
+
+    val fromRef = MsgRef(base + 5000L, 0)
+    var fromAnswer = Seq.empty[String]
+    val fromJobs = jobsOf {
+      fromAnswer = unicasts(engine.from("s", 0, fromRef, format = "protocol"))
+    }
+    assert(fromJobs == 1, s"$fromJobs jobs")
+    assert(seqsOf(fromAnswer) == (5 until 20)) // ascending across the day, once each
+    assert(fromAnswer == formatted(BrokerQueries.requestFrom(merged, "s", 0, fromRef)))
+
+    val toRef = MsgRef(base + dayMs + 4000L, 14)
+    var rangeAnswer = Seq.empty[String]
+    val rangeJobs = jobsOf {
+      rangeAnswer = unicasts(engine.range("s", 0, fromRef, toRef, format = "protocol"))
+    }
+    assert(rangeJobs == 1, s"$rangeJobs jobs")
+    assert(seqsOf(rangeAnswer) == (5 until 15))
+    assert(rangeAnswer ==
+      formatted(BrokerQueries.requestRange(merged, "s", 0, fromRef, toRef)))
+
+    var meta = Option.empty[(Long, Long, Long, Long)]
+    val metaJobs = jobsOf { meta = engine.metadata("s", 0) }
+    assert(metaJobs == 1, s"$metaJobs jobs")
+    val expected = BrokerQueries.metadata(
+      merged.filter(col("stream_id") === "s" && col("stream_partition") === 0)).head()
+    assert(meta.contains((expected.getAs[Long]("message_count"),
+      expected.getAs[Long]("total_bytes"),
+      base, base + dayMs + 9000L)))
+    assert(meta.exists(_._1 == 20L))
+  }
+
+  test("engine.compact restores a planted .trash twin and compacts it") {
+    val path = tmpDir("graft-engine-compact-recover")
+    val engine = new GraftEngine(spark, path)
+    (0 until 2).foreach { i =>
+      MessageStore.append(streamDataOf(msg("s", 0, 1700000000000L + i * 1000, i)), path)
+    }
+    val partDir = new java.io.File(s"$path/stream_id=s/stream_partition=0")
+    val live = new java.io.File(partDir, "bucket=2023-11-14")
+    val trash = new java.io.File(partDir, ".bucket=2023-11-14.trash")
+    // crash after rename(live→trash): the rows are hidden until recovery
+    assert(live.renameTo(trash))
+    assert(engine.compact("s", 0) == 1)
+    assert(!trash.exists())
+    assert(live.listFiles().count(_.getName.endsWith(".parquet")) == 1)
+    assert(keysOf(MessageStore.open(spark, path)).sorted ==
+      Seq((1700000000000L, 0, "publisher", "1"), (1700000001000L, 1, "publisher", "1")))
   }
 
   test("commit delivers before the marker: a failed marker re-delivers on " +
