@@ -125,10 +125,10 @@ final class GraftEngine(
     subscriptions.subscribe(subscriberId, streamId, partition, format)
 
   /** Maintenance: merge per-batch small files of a stream-part's buckets
-    * (the reference's bucket-rolling analog). Crashed compactions from an
-    * earlier run are recovered first. Returns buckets compacted. */
+    * (the reference's bucket-rolling analog), in place and listing only
+    * that stream-part; a crashed earlier compaction needs no recovery (see
+    * [[MessageStore.compactStreamPart]]). Returns buckets compacted. */
   def compact(streamId: String, partition: Int): Int =
-    // recovery of crashed earlier compactions happens inside compactStreamPart
     MessageStore.compactStreamPart(spark, storePath, streamId, partition)
 
   /** Policy-driven maintenance across the whole store: compact every
@@ -139,7 +139,6 @@ final class GraftEngine(
     * replay-purged and marker-clean, so serving reads over them skip the
     * merge window. Returns buckets compacted. */
   def autoCompact(maxFilesPerBucket: Int = 4): Int =
-    // recovery of crashed earlier sweeps happens inside autoCompact
     MessageStore.autoCompact(spark, storePath, maxFilesPerBucket)
 
   /** Retention: drop buckets whose newest row is older than

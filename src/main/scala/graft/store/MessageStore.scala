@@ -28,7 +28,9 @@ import graft.operators.BrokerQueries.MsgRef
   * one Spark job. At 100 TB: a request's I/O is bounded by its own
   * stream-part and window, never the store; per-bucket file counts stay
   * bounded by the ingest micro-batch cadence (one file per bucket per
-  * batch per writer task);
+  * batch per writer task) and by compaction, which rewrites a bucket in
+  * place inside its own directory and never hides a committed row, so it
+  * needs no crash recovery and no walk of the store;
   * retention drops whole bucket directories, mirroring the reference's
   * bucket-granular DELETE (`DeleteExpiredCmd.ts:135-161`), and reads at
   * most the one day per stream-part that straddles its cutoff.
@@ -178,15 +180,10 @@ object MessageStore {
     * the marker). Underscore-prefixed — parquet readers skip it. */
   val CleanMarker = "_clean"
 
-  private def parquetFileCount(fs: org.apache.hadoop.fs.FileSystem,
-      bucket: Path): Int =
-    fs.listStatus(bucket)
-      .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-
-  /** `fileCount` is the parquet-file count of the STAGING directory,
-    * captured before the swap: staging is private to the compaction, so
-    * the count cannot fold in a concurrent append — listing the live
-    * bucket after the swap could, and would stamp a dirty bucket clean. */
+  /** `fileCount` is the number of files the compaction staged, counted in
+    * its private staging directory before they moved in: counting the
+    * bucket after the move could fold in a concurrent append and stamp a
+    * dirty bucket clean. */
   private def writeCleanMarker(fs: org.apache.hadoop.fs.FileSystem,
       bucket: Path, fileCount: Int): Unit = {
     val out = fs.create(new Path(bucket, CleanMarker), true)
@@ -194,9 +191,10 @@ object MessageStore {
     finally out.close()
   }
 
-  /** One live bucket directory: its (unescaped) partition value, its path,
-    * and two facts read lazily from ONE listing of the directory, so only
-    * the buckets a read selects pay for it:
+  /** One bucket directory: its (unescaped) partition value, its path,
+    * and three facts read lazily from ONE listing of the directory, so only
+    * the buckets a read or a compaction selects pay for it:
+    *  - `dataFiles`: its parquet files (a compaction's read set);
     *  - `clean`: the `_clean` marker exists and still matches the
     *    directory's parquet-file count, i.e. no append since it was stamped
     *    (plus the marker read when present; conservative on any read
@@ -217,7 +215,8 @@ object MessageStore {
     private lazy val files: Seq[org.apache.hadoop.fs.FileStatus] =
       try fs.listStatus(path).toSeq.filter(_.isFile)
       catch { case _: java.io.IOException => Nil }
-    private def dataFiles = files.filter(_.getPath.getName.endsWith(".parquet"))
+    lazy val dataFiles: Seq[org.apache.hadoop.fs.FileStatus] =
+      files.filter(_.getPath.getName.endsWith(".parquet"))
 
     lazy val clean: Boolean =
       files.exists(_.getPath.getName == CleanMarker) &&
@@ -240,8 +239,8 @@ object MessageStore {
     }
   }
 
-  /** The live buckets of one stream-part directory (none when it does not
-    * exist). Hidden `.bucket=…` compaction twins are not buckets. */
+  /** The buckets of one stream-part directory (none when it does not
+    * exist). */
   private def listBuckets(fs: org.apache.hadoop.fs.FileSystem,
       partDir: Path): Seq[Bucket] = {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
@@ -266,7 +265,7 @@ object MessageStore {
     listBuckets(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)
   }
 
-  /** All live buckets under the store root. */
+  /** All buckets under the store root. */
   private def bucketDirs(fs: org.apache.hadoop.fs.FileSystem,
       root: Path): Seq[Bucket] =
     if (!fs.exists(root)) Nil
@@ -418,43 +417,24 @@ object MessageStore {
   /** Compact one stream-part's buckets: micro-batch ingest leaves one file
     * per bucket per batch, so long-lived buckets accumulate small files —
     * the engine-side analog of the reference's size-capped bucket rolling
-    * (`BucketManager.ts:50-51`). Rewrites each multi-file bucket directory
-    * to `targetFiles` files, purging cross-batch replay duplicates in the
-    * same rewrite (the sstable-compaction half of the upsert contract —
-    * [[openMerged]] is the merge-on-read half; a replayed key's ts lands it
-    * in the same bucket as the original, so bucket-local dedup on the
-    * within-bucket key `(ts, sequence_no, publisher_id, msg_chain_id)` is
-    * exact). Returns the number of buckets compacted.
-    *
-    * Crash-safe, and defensive against a concurrent writer (though
-    * compaction is designed to run from the maintenance path, not to race
-    * an active ingest — schedule it off-peak or per idle stream-part):
-    *  - the staged file set is re-checked after the staging write AND
-    *    re-verified from the trash directory after the rename(live→trash)
-    *    — the rename is the commit point, so a file that slipped in
-    *    between check and rename is detected and the bucket is restored,
-    *    never deleted;
-    *  - rename(staging→live) runs only when the live path is absent (a
-    *    Hadoop rename onto an existing directory would nest the source
-    *    inside it); if a concurrent writer recreated the live dir, the
-    *    original files are moved back file-by-file (part-file names are
-    *    globally unique) and the compaction aborts;
-    *  - the swap order rename(live→trash), rename(staging→live),
-    *    delete(trash) keeps committed data live-or-recoverable at every
-    *    instant; [[recoverCompaction]] sweeps leftover hidden dirs on the
-    *    next maintenance run. */
+    * (`BucketManager.ts:50-51`). Rewrites, in place ([[compactBucket]]),
+    * every bucket holding two or more parquet files, or one file without a
+    * valid `_clean` stamp (what a crash before the stamp leaves), to one
+    * file, purging cross-batch replay duplicates in the same rewrite (the
+    * sstable-compaction half of the upsert contract — [[openMerged]] is the
+    * merge-on-read half; a replayed key's ts lands it in the same bucket as
+    * the original, so bucket-local dedup on the within-bucket key
+    * `(ts, sequence_no, publisher_id, msg_chain_id)` is exact). Lists only
+    * this stream-part's directory. Returns the number of buckets
+    * compacted. */
   def compactStreamPart(
-      spark: SparkSession, path: String, streamId: String, partition: Int,
-      targetFiles: Int = 1, minFiles: Int = 2): Int = {
+      spark: SparkSession, path: String, streamId: String, partition: Int): Int = {
     val dir = partDir(path, streamId, partition)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return 0
-    // every compaction entry point recovers crash states first (the
-    // policy sweep and Engine.compact used to compensate caller-side;
-    // a hidden-live or blocked-trash bucket must never silently skip)
-    recoverCompaction(spark, path)
-    listBuckets(fs, dir)
-      .count(b => compactBucket(spark, fs, b.path, targetFiles, minFiles))
+    val due = listBuckets(fs, dir)
+      .filter(b => b.dataFiles.size > 1 || b.dataFiles.nonEmpty && !b.clean)
+    due.foreach(compactBucket(spark, fs, _))
+    due.size
   }
 
   /** Policy-driven compaction across the whole store: compact exactly the
@@ -468,198 +448,58 @@ object MessageStore {
     * open/footer overhead, so the policy bounds exactly that. The sweep is
     * pure filesystem metadata — no data reads for buckets under the
     * threshold. Returns the number of buckets compacted. */
-  def autoCompact(spark: SparkSession, path: String,
-      maxFilesPerBucket: Int = 4, targetFiles: Int = 1): Int = {
+  def autoCompact(spark: SparkSession, path: String, maxFilesPerBucket: Int = 4): Int = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return 0
-    // a crashed earlier sweep leaves buckets in swap states that both hide
-    // rows (live renamed to .trash) and block all future compaction of the
-    // bucket (the !exists(trash) guard) — every policy entry point must
-    // recover first; recovery is idempotent and metadata-only when clean
-    recoverCompaction(spark, path)
-    bucketDirs(fs, root).count { b =>
-      parquetFileCount(fs, b.path) >= maxFilesPerBucket &&
-        compactBucket(spark, fs, b.path, targetFiles, minFiles = maxFilesPerBucket)
-    }
+    val due = bucketDirs(fs, root).filter(_.dataFiles.size >= maxFilesPerBucket)
+    due.foreach(compactBucket(spark, fs, _))
+    due.size
   }
 
-  /** One bucket's dedup-rewrite + crash-safe swap (see [[compactStreamPart]]
-    * for the protocol contract). Returns true when the swap committed. */
-  private def compactBucket(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem, bucket: Path,
-      targetFiles: Int, minFiles: Int): Boolean = {
-    def dataFiles = fs.listStatus(bucket)
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(f => (f.getPath.getName, f.getLen)).toSet
-    val staged = dataFiles
-    if (staged.size < minFiles) return false
-    val staging = new Path(bucket.getParent, s".${bucket.getName}.compact")
-    val trash = new Path(bucket.getParent, s".${bucket.getName}.trash")
-    fs.delete(staging, true) // stale staging from an earlier crash
-    val bucketRows = spark.read.parquet(bucket.toString)
-    // stream_id/stream_partition are directory levels here, constant
-    // within the bucket — the remaining uniqueness-key columns suffice
-    graft.dedup.Dedup.ingestDedup(bucketRows,
-      graft.model.StreamMessage.uniqueKey.filter(bucketRows.columns.contains))
-      .coalesce(targetFiles)
+  /** The columns of a stored file: the message columns less the
+    * stream-part, which the directory levels hold. */
+  private val fileSchema = org.apache.spark.sql.types.StructType(
+    graft.model.StreamMessage.schema.filterNot(f => PartitionCols.contains(f.name)))
+
+  /** One bucket's dedup rewrite, in place:
+    *  1. the bucket's parquet files, listed once, are the set read;
+    *  2. `_clean` is deleted: from here on every read of the bucket merges;
+    *  3. exactly the files read are deduplicated on the within-bucket key
+    *     and written as one file to `_compact` (underscore-prefixed, so
+    *     parquet readers and [[Bucket]] listings skip it, and retention
+    *     drops it with the bucket);
+    *  4. the staged file moves into the bucket (part names are unique; the
+    *     filesystem moves its checksum with it);
+    *  5. exactly the files read are deleted, then `_compact`;
+    *  6. `_clean` is stamped with the staged file count, last.
+    * Every intermediate state is a valid merge-on-read state, so none needs
+    * recovery: a crash leaves every committed row live, at most beside a
+    * second copy in an unmarked bucket, which reads merge away (the dedup
+    * window orders by the full row, so a read keeps the row the compacted
+    * file holds) and the next compaction purges. A file appended after the
+    * listing is never deleted (it was not read) and voids the stamp by
+    * count. Compactions of one bucket must not overlap: two runs share
+    * `_compact`. */
+  private def compactBucket(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, bucket: Bucket): Unit = {
+    val read = bucket.dataFiles.map(_.getPath)
+    fs.delete(new Path(bucket.path, CleanMarker), false)
+    val staging = new Path(bucket.path, "_compact")
+    val rows = spark.read.schema(fileSchema).parquet(read.map(_.toString): _*)
+    graft.dedup.Dedup.ingestDedup(rows,
+      graft.model.StreamMessage.uniqueKey.filter(rows.columns.contains))
+      .coalesce(1)
       .write.mode("overwrite").parquet(staging.toString)
-    val stagedOut = parquetFileCount(fs, staging)
-    // concurrent-append guard: only swap if the live file set is
-    // exactly what was staged
-    if (dataFiles == staged && !fs.exists(trash) &&
-        fs.rename(bucket, trash)) {
-      // the rename is the commit point — re-verify from the trash side
-      // that nothing landed between the re-check and the rename
-      val trashed = fs.listStatus(trash)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(f => (f.getPath.getName, f.getLen)).toSet
-      // swap-in precondition: live must be absent (rename onto an
-      // existing dir would nest staging inside it)
-      if (trashed == staged && !fs.exists(bucket) &&
-          fs.rename(staging, bucket)) {
-        // TOCTOU re-check: a writer recreating live between the exists
-        // check and the rename makes Hadoop nest staging INSIDE the new
-        // live dir (rename still returns true). Verify the swap landed
-        // flat before the trash delete — that delete is the only
-        // destructive step. Restore order matters for crash recovery:
-        // originals back first, THEN drop the nested copy (so a
-        // leftover nested dir always means originals are already live,
-        // which is what recoverCompaction assumes).
-        val nested = new Path(bucket, staging.getName)
-        if (fs.exists(nested)) {
-          restoreBucket(fs, trash, bucket)
-          fs.delete(nested, true)
-          false
-        } else {
-          fs.delete(trash, true)
-          // swap committed: the bucket now holds exactly the dedup-rewritten
-          // files — stamp it clean so reads skip the merge window until the
-          // next append (a crash before the stamp just leaves the bucket
-          // conservatively unclean; an append racing the stamp voids it by
-          // count mismatch because the count is the pre-swap staging one)
-          writeCleanMarker(fs, bucket, stagedOut)
-          true
-        }
-      } else {
-        // late append detected, live dir recreated by a concurrent
-        // writer, or swap-in failed: restore originals and abort
-        restoreBucket(fs, trash, bucket)
-        fs.delete(staging, true)
-        false
-      }
-    } else { fs.delete(staging, true); false } // bucket changed mid-compact
-  }
-
-  /** Put a trashed bucket back: whole-dir rename when the live path is
-    * free (atomic), else file-by-file moves into the recreated live dir —
-    * part-file names are globally unique, so nothing can collide with what
-    * a concurrent writer added. */
-  private def restoreBucket(fs: org.apache.hadoop.fs.FileSystem,
-      trash: Path, live: Path): Unit = {
-    if (!fs.exists(live) && fs.rename(trash, live)) return
-    if (fs.exists(trash)) {
-      fs.listStatus(trash).filter(_.isFile).foreach { f =>
-        fs.rename(f.getPath, new Path(live, f.getPath.getName))
-      }
-      fs.delete(trash, true)
+    val staged = fs.listStatus(staging).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    staged.foreach { f =>
+      // never delete the originals unless every staged file moved in
+      if (!fs.rename(f, new Path(bucket.path, f.getName)))
+        throw new java.io.IOException(s"could not move $f into ${bucket.path}")
     }
-  }
-
-  /** Recover buckets left in a crashed-compaction state. Per bucket, the
-    * surviving (live, `.trash`, `.compact`, nested-`.compact`) combination
-    * identifies exactly where the crash fell in [[compactStreamPart]]'s
-    * swap protocol, and each state has one safe action:
-    *  - live missing, trash/compact twin present → rename the twin back in
-    *    (trash preferred — it is the pre-compaction original; a `.compact`
-    *    twin is equivalent rows);
-    *  - live recreated by a concurrent writer while originals sat in trash
-    *    (trash + part-level `.compact`, or trash + a `.compact` dir nested
-    *    INSIDE live by the rename race) → merge the trashed originals back
-    *    file-by-file (part-file names are globally unique), then drop the
-    *    staged copy;
-    *  - live present with only a trash twin and no staged copy anywhere →
-    *    the compacted swap committed and only the trash delete was lost:
-    *    drop the trash (its rows are equivalent to the live compacted
-    *    files);
-    *  - a nested `.compact` with no trash → originals were already
-    *    restored (compactStreamPart restores before dropping the nested
-    *    copy, in that order precisely so this state is unambiguous): drop
-    *    the nested dir.
-    * Returns recovered/restored live bucket paths. Idempotent; run
-    * before/after compaction sweeps. */
-  def recoverCompaction(spark: SparkSession, path: String): Seq[String] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val recovered = scala.collection.mutable.ArrayBuffer[String]()
-    for {
-      stream <- fs.listStatus(root) if stream.isDirectory
-      part <- fs.listStatus(stream.getPath) if part.isDirectory
-      hidden <- fs.listStatus(part.getPath)
-      name = hidden.getPath.getName
-      if hidden.isDirectory && name.startsWith(".bucket=")
-    } {
-      val live = new Path(part.getPath,
-        name.stripPrefix(".").stripSuffix(".trash").stripSuffix(".compact"))
-      if (!fs.exists(live)) {
-        // crash window: restore committed data, trash preferred — it is
-        // the pre-compaction original, and may hold a file a concurrent
-        // writer slipped in after staging that the .compact copy lacks.
-        // The preference must be enforced HERE, not left to listing
-        // order: '.compact' lists before '.trash', and renaming the
-        // staged copy first would make the later .trash iteration read
-        // "swap committed" and delete the originals.
-        val trashTwin = new Path(part.getPath,
-          name.stripSuffix(".compact") + ".trash")
-        if (name.endsWith(".compact") && fs.exists(trashTwin)) {
-          if (fs.rename(trashTwin, live)) {
-            fs.delete(hidden.getPath, true)
-            recovered += live.toString
-          }
-        } else if (fs.rename(hidden.getPath, live)) recovered += live.toString
-      } else if (name.endsWith(".trash")) {
-        val stagedFlat = new Path(part.getPath, s"$name".stripSuffix(".trash") + ".compact")
-        val stagedNested = new Path(live, stagedFlat.getName)
-        if (fs.exists(stagedFlat) || fs.exists(stagedNested)) {
-          // writer recreated live mid-swap: live holds only the writer's
-          // new files — merge the originals back, then drop staged copies.
-          // The merge can also REINTRODUCE rows a committed compaction had
-          // already purged (a stale trash from a pre-delete crash beside a
-          // later run's staging is indistinguishable from this state), so
-          // always dedup-rewrite the merged bucket: duplicates can never
-          // survive recovery, whichever history produced the state.
-          restoreBucket(fs, hidden.getPath, live)
-          fs.delete(stagedFlat, true)
-          fs.delete(stagedNested, true)
-          compactBucket(spark, fs, live, targetFiles = 1, minFiles = 1)
-          recovered += live.toString
-        } else {
-          // flat swap committed (live IS the compacted rows); only the
-          // trash delete was lost
-          fs.delete(hidden.getPath, true)
-        }
-      } else {
-        // pre-swap .compact leftover — but when a sibling .trash exists it
-        // is this bucket's disambiguation signal (writer-recreated-live vs
-        // committed-swap), so leave both for the .trash branch to resolve
-        // regardless of listing order
-        val trashTwin = new Path(part.getPath,
-          name.stripSuffix(".compact") + ".trash")
-        if (!fs.exists(trashTwin)) fs.delete(hidden.getPath, true)
-      }
-    }
-    // nested staging dirs with no part-level trash: originals are already
-    // restored (see compactStreamPart's restore-then-delete order) — sweep
-    for {
-      stream <- fs.listStatus(root) if stream.isDirectory
-      part <- fs.listStatus(stream.getPath) if part.isDirectory
-      bucket <- fs.listStatus(part.getPath)
-      if bucket.isDirectory && bucket.getPath.getName.startsWith("bucket=")
-      nested <- fs.listStatus(bucket.getPath)
-      if nested.isDirectory && nested.getPath.getName.startsWith(".bucket=")
-    } fs.delete(nested.getPath, true)
-    recovered.toSeq
+    read.foreach(fs.delete(_, false))
+    fs.delete(staging, true)
+    writeCleanMarker(fs, bucket.path, staged.length)
   }
 
   /** Retention enforcement: drop expired bucket directories (no rewrite —

@@ -151,9 +151,10 @@ object IngestPipeline {
     * ingest-cadence analog of the reference's full-bucket check timer
     * (`BucketManager.ts:48` checkFullBucketsTimeout). It runs inside
     * foreachBatch, which Structured Streaming serializes with the appends,
-    * so the policy never races this query's own writer; a concurrent
-    * foreign writer is handled by compaction's swap guard (it aborts, the
-    * next cadence retries). */
+    * so the policy never races this query's own writer; a file a concurrent
+    * foreign writer lands mid-compaction is never deleted and leaves its
+    * bucket unmarked until the next sweep. The threshold is
+    * [[MessageStore.autoCompact]]'s default of 4 files per bucket. */
   def start(
       source: DataFrame,
       storePath: String,
@@ -161,8 +162,7 @@ object IngestPipeline {
       assigned: () => Option[Set[String]] = () => None,
       triggerMs: Long = 1000L,
       onBatch: (DataFrame, Long) => Unit = (_, _) => (),
-      autoCompactEvery: Int = 0,
-      maxFilesPerBucket: Int = 4): StreamingQuery =
+      autoCompactEvery: Int = 0): StreamingQuery =
     source.writeStream
       .option("checkpointLocation", checkpointPath)
       .trigger(Trigger.ProcessingTime(triggerMs))
@@ -171,7 +171,7 @@ object IngestPipeline {
           assigned, onBatch = onBatch)
         if (applied && autoCompactEvery > 0 &&
             batchId % autoCompactEvery == (autoCompactEvery - 1).toLong)
-          MessageStore.autoCompact(batch.sparkSession, storePath, maxFilesPerBucket)
+          MessageStore.autoCompact(batch.sparkSession, storePath)
         ()
       }
       .start()

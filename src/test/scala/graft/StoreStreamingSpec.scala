@@ -231,56 +231,6 @@ class StoreStreamingSpec extends SparkSpec {
     assert(s.getAs[Long]("batches_ge_100") == 0L)
   }
 
-  test("compact: crashed swap is recoverable; concurrent append aborts the swap") {
-    val path = tmpDir("graft-compact-crash")
-    (0 until 2).foreach { i =>
-      MessageStore.append(streamDataOf(msg("s", 0, 1700000000000L + i * 1000, i)), path)
-    }
-    val partDir = new java.io.File(s"$path/stream_id=s/stream_partition=0")
-    val live = new java.io.File(partDir, "bucket=2023-11-14")
-    val trash = new java.io.File(partDir, ".bucket=2023-11-14.trash")
-    // simulate a crash after rename(live→trash): live dir missing
-    assert(live.renameTo(trash))
-    assert(MessageStore.recoverCompaction(spark, path).size == 1)
-    assert(keysOf(MessageStore.open(spark, path)).length == 2)
-    // stale staging next to a healthy live dir is swept
-    val staging = new java.io.File(partDir, ".bucket=2023-11-14.compact")
-    assert(staging.mkdir())
-    assert(MessageStore.recoverCompaction(spark, path).isEmpty)
-    assert(!staging.exists())
-    // compaction still works end-to-end after recovery
-    assert(MessageStore.compactStreamPart(spark, path, "s", 0) == 1)
-    assert(keysOf(MessageStore.open(spark, path)).length == 2)
-  }
-
-  test("recovery prefers .trash over .compact when live is missing (late append survives)") {
-    val path = tmpDir("graft-trash-pref")
-    (0 until 2).foreach { i =>
-      MessageStore.append(streamDataOf(msg("s", 0, 1700000000000L + i * 1000, i)), path)
-    }
-    val partDir = new java.io.File(s"$path/stream_id=s/stream_partition=0")
-    val live = new java.io.File(partDir, "bucket=2023-11-14")
-    val staged = new java.io.File(partDir, ".bucket=2023-11-14.compact")
-    // stage a compacted copy of the CURRENT two files...
-    assert(staged.mkdir())
-    live.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-      java.nio.file.Files.copy(f.toPath,
-        new java.io.File(staged, f.getName).toPath)
-    }
-    // ...then a concurrent writer slips a third message into live, and
-    // the crash lands after rename(live -> trash): live missing, BOTH
-    // twins present, trash the superset
-    MessageStore.append(streamDataOf(msg("s", 0, 1700000002000L, 2)), path)
-    assert(live.renameTo(new java.io.File(partDir, ".bucket=2023-11-14.trash")))
-    assert(MessageStore.recoverCompaction(spark, path).size == 1)
-    // the pre-compaction original won — including the late third message
-    // — and the staged copy (which lacks it) is gone; '.compact' listing
-    // before '.trash' must not flip the preference
-    assert(keysOf(MessageStore.open(spark, path)).length == 3)
-    assert(!staged.exists())
-    assert(!new java.io.File(partDir, ".bucket=2023-11-14.trash").exists())
-  }
-
   test("dropAgedBuckets: a day bucket survives an intra-day cutoff") {
     val path = tmpDir("graft-ttl-intraday")
     // rows at 2023-11-14T00:00 and T15:00
@@ -312,22 +262,6 @@ class StoreStreamingSpec extends SparkSpec {
       MsgRef(1700006400000L, 0)) // past the day's exclusive end
     assert(dropped.size == 1 && dropped.head.contains("2023-11-14"))
     assert(new java.io.File(partDir, "bucket=GARBAGE-XX").exists())
-  }
-
-  test("autoCompact recovers a crashed swap before applying the policy") {
-    val path = tmpDir("graft-ac-recover")
-    (0 until 2).foreach { i =>
-      MessageStore.append(streamDataOf(msg("s", 0, 1700000000000L + i * 1000, i)), path)
-    }
-    val partDir = new java.io.File(s"$path/stream_id=s/stream_partition=0")
-    val live = new java.io.File(partDir, "bucket=2023-11-14")
-    // crash after rename(live→trash): rows hidden, bucket blocked for
-    // compaction by the !exists(trash) guard — the policy entry point must
-    // recover, then compact (2 files >= threshold 2)
-    assert(live.renameTo(new java.io.File(partDir, ".bucket=2023-11-14.trash")))
-    assert(MessageStore.autoCompact(spark, path, maxFilesPerBucket = 2) == 1)
-    assert(keysOf(MessageStore.open(spark, path)).length == 2)
-    assert(live.listFiles().count(_.getName.endsWith(".parquet")) == 1)
   }
 
   test("cross-batch replay: merge-on-read hides duplicates; compaction purges them") {
@@ -410,62 +344,6 @@ class StoreStreamingSpec extends SparkSpec {
     // covering of limit=3 deflates, so the read must widen to older buckets
     val got = MessageStore.requestLastBounded(spark, path, "s", 0, 3)
     assert(keysOf(got).map(_._2) == Seq(0, 1, 2))
-  }
-
-  test("recover: a stale trash beside fresh staging cannot resurrect purged replays") {
-    val path = tmpDir("graft-stale-trash")
-    val m = msg("s", 0, 1700000000000L, 0)
-    MessageStore.append(streamDataOf(m), path)
-    MessageStore.append(streamDataOf(m), path) // replay -> 2 physical rows
-    val partDir = new java.io.File(s"$path/stream_id=s/stream_partition=0")
-    val live = new java.io.File(partDir, "bucket=2023-11-14")
-    // keep a copy of the pre-compaction originals (what a pre-delete-crash
-    // trash dir would hold)
-    val copy = new java.io.File(partDir, ".originals-keep") // dot: invisible to Spark
-    assert(copy.mkdir())
-    live.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-      java.nio.file.Files.copy(f.toPath, new java.io.File(copy, f.getName).toPath)
-    }
-    // compaction commits: replay purged
-    assert(MessageStore.compactStreamPart(spark, path, "s", 0) == 1)
-    assert(MessageStore.open(spark, path).count() == 1)
-    // simulate crash state: stale trash of originals + a later run's staging
-    assert(copy.renameTo(new java.io.File(partDir, ".bucket=2023-11-14.trash")))
-    assert(new java.io.File(partDir, ".bucket=2023-11-14.compact").mkdir())
-    assert(MessageStore.recoverCompaction(spark, path).size == 1)
-    // recovery merged the stale originals but dedup-rewrote the bucket:
-    // the purged replay must NOT come back
-    assert(MessageStore.open(spark, path).count() == 1)
-  }
-
-  test("compact: writer-recreated-live race states restore originals, not delete them") {
-    // state A: trash holds originals, a concurrent writer recreated live,
-    // part-level staged .compact still present (crash before swap-in)
-    val path = tmpDir("graft-compact-race")
-    (0 until 2).foreach { i =>
-      MessageStore.append(streamDataOf(msg("s", 0, 1700000000000L + i * 1000, i)), path)
-    }
-    val partDir = new java.io.File(s"$path/stream_id=s/stream_partition=0")
-    val live = new java.io.File(partDir, "bucket=2023-11-14")
-    val trash = new java.io.File(partDir, ".bucket=2023-11-14.trash")
-    val staging = new java.io.File(partDir, ".bucket=2023-11-14.compact")
-    assert(live.renameTo(trash))
-    // "concurrent writer" recreates the live dir with a new row
-    MessageStore.append(streamDataOf(msg("s", 0, 1700000002000L, 2)), path)
-    assert(staging.mkdir())
-    assert(MessageStore.recoverCompaction(spark, path).size == 1)
-    assert(keysOf(MessageStore.open(spark, path)).length == 3) // 2 originals + 1 new
-    assert(!trash.exists() && !staging.exists())
-
-    // state B: the rename(staging→live) nested staging INSIDE the
-    // recreated live dir (the TOCTOU the inline guard detects)
-    assert(live.renameTo(trash))
-    MessageStore.append(streamDataOf(msg("s", 0, 1700000003000L, 3)), path)
-    val nested = new java.io.File(live, ".bucket=2023-11-14.compact")
-    assert(nested.mkdir())
-    assert(MessageStore.recoverCompaction(spark, path).size == 1)
-    assert(keysOf(MessageStore.open(spark, path)).length == 4) // 3 restored + 1 new
-    assert(!trash.exists() && !nested.exists())
   }
 
   test("openStreamPart: a time-bounded read selects its buckets by name") {
@@ -677,24 +555,6 @@ class StoreStreamingSpec extends SparkSpec {
     assert(meta.exists(_._1 == 20L))
   }
 
-  test("engine.compact restores a planted .trash twin and compacts it") {
-    val path = tmpDir("graft-engine-compact-recover")
-    val engine = new GraftEngine(spark, path)
-    (0 until 2).foreach { i =>
-      MessageStore.append(streamDataOf(msg("s", 0, 1700000000000L + i * 1000, i)), path)
-    }
-    val partDir = new java.io.File(s"$path/stream_id=s/stream_partition=0")
-    val live = new java.io.File(partDir, "bucket=2023-11-14")
-    val trash = new java.io.File(partDir, ".bucket=2023-11-14.trash")
-    // crash after rename(live→trash): the rows are hidden until recovery
-    assert(live.renameTo(trash))
-    assert(engine.compact("s", 0) == 1)
-    assert(!trash.exists())
-    assert(live.listFiles().count(_.getName.endsWith(".parquet")) == 1)
-    assert(keysOf(MessageStore.open(spark, path)).sorted ==
-      Seq((1700000000000L, 0, "publisher", "1"), (1700000001000L, 1, "publisher", "1")))
-  }
-
   test("commit delivers before the marker: a failed marker re-delivers on " +
       "replay and the store still reads each row once") {
     val path = tmpDir("graft-atleastonce")
@@ -751,9 +611,8 @@ class StoreStreamingSpec extends SparkSpec {
     val ckpt = tmpDir("graft-ingest-ac-ckpt")
     val now = System.currentTimeMillis()
     val input = MemoryStream[StreamMessage](s)
-    // threshold 3, sweep after every 2nd committed batch
-    val q = IngestPipeline.start(input.toDF(), path, ckpt,
-      autoCompactEvery = 2, maxFilesPerBucket = 3)
+    // default threshold 4, sweep after every 2nd committed batch
+    val q = IngestPipeline.start(input.toDF(), path, ckpt, autoCompactEvery = 2)
     try {
       // four single-row batches into the same day bucket
       (0 until 4).foreach { i =>
@@ -763,9 +622,9 @@ class StoreStreamingSpec extends SparkSpec {
       val bucketDir = new java.io.File(s"$path/stream_id=s/stream_partition=0")
         .listFiles().filter(_.getName.startsWith("bucket=")).head
       val files = bucketDir.listFiles().count(_.getName.endsWith(".parquet"))
-      // batch 3's cadence fired with 3 accumulated files -> compacted to 1,
-      // then batch 4 appended one more; without the policy there'd be 4
-      assert(files <= 2, s"expected compacted bucket, found $files files")
+      // batch 2's sweep saw 2 files (under the threshold); batch 4's saw 4
+      // and compacted them to 1; without the policy there'd be 4
+      assert(files == 1, s"expected compacted bucket, found $files files")
       assert(MessageStore.open(spark, path).count() == 4)
     } finally q.stop()
   }
